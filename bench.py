@@ -5,7 +5,7 @@ Prints ONE JSON line:
    "queries": {...per-query seconds...}, "sf": ...}
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
+     SPARK_GRAFT_CPUS (default: the CPUs this process may run on),
      SPARK_GRAFT_BENCH_TURNS (override suite input size).
 """
 
@@ -91,13 +91,13 @@ def materialize(df) -> None:
 
 
 def main() -> None:
+    from ssimulacra2_spark.registry import QUERIES
+    from ssimulacra2_spark.session import default_parallelism, get_spark
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_parallelism()
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else 0.1
-
-    from ssimulacra2_spark.registry import QUERIES
-    from ssimulacra2_spark.session import get_spark
 
     spark = get_spark("bench", cores=cpus)
     spark.sparkContext.setLogLevel("ERROR")

@@ -24,11 +24,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
+    from ssimulacra2_spark.session import default_parallelism
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--queries", required=True, help="comma-separated registry ids")
     ap.add_argument("--reps", type=int, default=1)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=default_parallelism())
     ap.add_argument("--explain-dir", default=None)
     ap.add_argument("--explain-suffix", default="")
     ap.add_argument("--no-time", action="store_true", help="explain only, skip execution")

@@ -34,17 +34,6 @@ def main() -> None:
     # first-touch page faults are serviced serially by the hypervisor,
     # see tools/vm_pagefault_ceiling.py) an already-faulted working set
     p.add_argument("--warmup", type=int, default=0)
-    # how branches share the prepared projection: none|memory|staging
-    # (config.py docstring; 'memory' persists the compact featurized
-    # columns once instead of re-decoding text per check branch)
-    p.add_argument("--cache-mode", default="none")
-    p.add_argument("--staging-dir", default=None,
-                   help="cache_mode=staging target (put on tmpfs for the "
-                        "prepared-projection experiment)")
-    p.add_argument("--drift-impl", default="arrow", choices=["arrow", "window"])
-    # adaptive kernel plan probe (config.drift_hot_turns): chunk the whole
-    # kernel iff some conversation exceeds this; 0 = plain kernel always
-    p.add_argument("--drift-hot-turns", type=int, default=0)
     p.add_argument("--data-dir", default=None, help="reuse pre-generated pair")
     args = p.parse_args()
 
@@ -73,10 +62,6 @@ def main() -> None:
         n_buckets=args.buckets,
         num_scales=args.scales,
         drift_subbuckets=args.drift_subbuckets,
-        drift_hot_turns=args.drift_hot_turns,
-        cache_mode=args.cache_mode,
-        staging_dir=args.staging_dir,
-        drift_impl=args.drift_impl,
         checks=(
             "schema",
             "min_rows",

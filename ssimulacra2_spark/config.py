@@ -3,7 +3,7 @@
 Analog of the reference's YuvConfig metadata record
 (/root/reference/ssimulacra2_bin/src/video.rs:369-386): everything that
 governs interpretation of the raw table — expected schema, vocabularies,
-guards, window radius, scale count, thresholds — in one serializable
+guards, scale count, thresholds — in one serializable
 object. All scale knobs (buckets, salt fanout, sketch precision) are
 config-driven so the same code path runs at sf0.001 and at 10^12 rows
 (SURVEY §7.2).
@@ -12,9 +12,9 @@ config-driven so the same code path runs at sf0.001 and at 10^12 rows
 from __future__ import annotations
 
 import json
-from dataclasses import asdict, dataclass
+from dataclasses import asdict, dataclass, fields
 
-from .constants import MIN_SIZE, NUM_SCALES, RADIUS, SCORE_PASS_THRESHOLD
+from .constants import MIN_SIZE, NUM_SCALES, SCORE_PASS_THRESHOLD
 
 DEFAULT_ROLES = ("system", "user", "assistant", "tool")
 DEFAULT_TOOLS = (
@@ -60,8 +60,8 @@ class CheckSuiteConfig:
     # guards (≙ min 8x8 / dimension parity, lib.rs:49-55)
     min_rows_per_partition: int = MIN_SIZE * MIN_SIZE
 
-    # windowed stats / drift (≙ blur radius build.rs:28, 6 scales lib.rs:9)
-    radius: int = RADIUS
+    # windowed stats / drift (≙ 6 scales lib.rs:9; the smoothing kernel is
+    # fixed: constants.KERNEL_TAPS)
     num_scales: int = NUM_SCALES
     # feature channels for the drift score (≙ the 3 Xyb planes). 'hash'
     # uses Spark's xxhash64 — exclude it when pinning against the
@@ -90,19 +90,12 @@ class CheckSuiteConfig:
     # spreads over n_turns/chunk tasks; chunk-boundary pairs are checked
     # over a tiny per-chunk summary (see checks.monotone_ts_violations)
     monotone_chunk_turns: int = 8192
-    # treat a conversation as "hot" above this many turns (doc only; the
-    # salted path is applied unconditionally — it is a pure win when cheap)
-    hot_conv_turns: int = 100_000
 
     # sketch knobs (100 TB path)
     hll_rsd: float = 0.02
     percentile_accuracy: int = 10_000
 
-    # drift implementation: 'arrow' = one applyInPandas kernel per
-    # partition bucket (fast path); 'window' = pure Spark window
-    # expressions (same math; useful for plan inspection / tiny inputs)
-    drift_impl: str = "arrow"
-    # Arrow-path fanout WITHIN a verdict bucket: the applyInPandas group key
+    # drift kernel fanout WITHIN a verdict bucket: the applyInPandas group key
     # is (partition_id, pmod(hash(conv_id), drift_subbuckets)) so one pandas
     # batch holds ~rows/(n_buckets*drift_subbuckets) rows regardless of how
     # coarse the verdict bucketing is. Conversations never straddle
@@ -120,34 +113,6 @@ class CheckSuiteConfig:
     # extra fact exchanges, worth paying only for corpora with
     # pathological conversation lengths (>= ~10^7 turns in one conv).
     drift_chunk_turns: int = 0
-    # Adaptive PLAN choice for the kernel (0 = off): when set (and
-    # drift_chunk_turns is 0), a driver-side probe — one map-combinable
-    # max-of-conv-counts over a conv_id-pruned scan — switches the WHOLE
-    # kernel to the chunked path iff some conversation exceeds this many
-    # turns. Plan-level choice, deliberately NOT row-level hot/cold
-    # routing: the split design was built and measured ~+10s on the 8M
-    # bench (its two filtered consumers re-merge the pair join on every
-    # row, a tax bigger than any straggler it saves — drift_arrow.
-    # _probe_chunking documents the numbers). Off by default because the
-    # probe costs a scan per run; at warehouse scale the same decision
-    # comes free from table statistics (a transcript store tracks
-    # conversation lengths). Set to the corpus size where chunking
-    # measurably wins: >= ~2M turns in one conversation (1.8-2.3x faster
-    # there; net slower below — ARCHITECTURE §3).
-    drift_hot_turns: int = 0
-
-    # how check branches share the prepared compact projection:
-    #   'none'    — each branch rescans the pruned source columns (cheap
-    #               featurization recomputes in parallel; best measured
-    #               default here and the right call on Iceberg, where
-    #               column pruning makes rescans cheap)
-    #   'memory'  — DataFrame persist (columnar cache; costs heap + a
-    #               serial build pass — measured slower at 32M rows)
-    #   'staging' — write the projection once to a staging parquet dir and
-    #               scan that (the 100 TB pattern for very expensive
-    #               featurization)
-    cache_mode: str = "none"
-    staging_dir: str | None = None
 
     # checkpoint/resume commit granularity: when results are written
     # through TableIO, the partition-id space is processed as this many
@@ -175,8 +140,11 @@ class CheckSuiteConfig:
 
     @classmethod
     def from_json(cls, s: str) -> CheckSuiteConfig:
+        """Inverse of to_json. JSON has no tuples, so every tuple-valued
+        field is re-tupled; an unknown key (e.g. a removed field in an old
+        config file) raises TypeError rather than being dropped."""
         d = json.loads(s)
-        for k in ("key_cols", "roles", "tools", "checks", "channels"):
-            if k in d:
-                d[k] = tuple(d[k])
+        for f in fields(cls):
+            if isinstance(f.default, tuple) and f.name in d:
+                d[f.name] = tuple(d[f.name])
         return cls(**d)

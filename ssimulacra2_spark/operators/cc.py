@@ -1,11 +1,11 @@
 """Connected components via alternating large-star / small-star rounds.
 
-The dedup cluster resolver (registry/dedup.py::dedup_clusters) ships a
-min-label-propagation loop: simple, exact, but O(diameter) rounds of full
-label joins — fine for LSH bucket-star graphs (diameter ~= 2-4), wrong
-for the 10^12-row design point where an adversarial near-dup CHAIN
-(doc_1 ~ doc_2 ~ ... ~ doc_k, consecutive pairs sharing buckets but not
-transitively) makes the diameter unbounded. Large-star/small-star
+The dedup cluster resolver (registry/dedup.py::dedup_clusters) runs on
+this. Min-label propagation needs O(diameter) rounds of full label joins,
+which is wrong for the 10^12-row design point, where an adversarial
+near-dup CHAIN (doc_1 ~ doc_2 ~ ... ~ doc_k, consecutive pairs sharing
+buckets but not transitively) makes the diameter unbounded; it was also
+2.4x slower on the same LSH edges (ARCHITECTURE §7d). Large-star/small-star
 (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii — "Connected
 Components in MapReduce and Beyond", SoCC'14) converges in O(log^2 n)
 rounds on ANY graph, every round a pair of uniform-key shuffles
@@ -21,8 +21,7 @@ two nodes already connected through the pivot node) and strictly shrink
 the potential function (sum of neighbor distances-from-min), so the edge
 set reaches a fixed point: a star forest rooted at each component's
 minimum node. The fixed point is detected by an order-insensitive edge
-checksum (count + hash sum) going stable — the convergence certificate
-analog of dedup_clusters' monotone label sum.
+checksum (count + hash sum) going stable.
 
 Reference analog: the worker pool claiming frame indices atomically with
 no coordinator (/root/reference/ssimulacra2_bin/src/video.rs:159-168) —

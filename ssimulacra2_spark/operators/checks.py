@@ -77,7 +77,8 @@ def prepare(df: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:
     core-seconds per scan at 32M rows). This computes everything any check
     needs from `text` ONCE — length, xxhash, violation-forensics prefix,
     drift channels — and drops the payload. The result is ~100 B/row
-    columnar, cheap to rescan or stage (cfg.cache_mode). At 100 TB this
+    columnar and cheap to rescan, so each check branch rescans it (the
+    persisted and staged alternatives measured slower). At 100 TB this
     is also exactly the column pruning you want against Parquet/Iceberg:
     no check ever shuffles raw text."""
     from .drift_arrow import channel_expr

@@ -1,216 +1,41 @@
-"""Distribution-drift scoring between snapshot pairs — the engine's graft
-of the full SSIMULACRA2 pipeline (/root/reference/ssimulacra2/src/lib.rs):
+"""Drift checks between snapshot pairs, all plain DataFrame aggregates:
 
-  text -> numeric feature channels        (≙ planar Xyb channels, lib.rs:84-93)
-  -> paired alignment on (conv, turn)     (≙ elementwise zip, lib.rs:157-163)
-  -> 6-scale edge-clamped 2x rollup       (≙ downscale_by_2, lib.rs:165-195)
-  -> kernel-windowed mu/sigma/cov         (≙ 5 blurs, lib.rs:95-105)
-  -> ssim + edgediff error expressions    (≙ ssim_map/edge_diff_map, lib.rs:197-299)
-  -> L1/L4 norms per (partition,channel)  (≙ lib.rs:245-250)
-  -> broadcast-weighted reduce + calibration -> 0-100 health score
-                                          (≙ score(), lib.rs:344-487)
+- calibrated_score: the last step of the drift_score check — the
+  broadcast-weighted 108-term reduce of the per-(partition, channel,
+  scale, map, norm) error norms plus the nonlinear calibration to a
+  0-100 health score (≙ score(), lib.rs:344-487). The norms themselves
+  come from the Arrow kernel in operators/drift_arrow.py (windowed
+  moments, ssim + edgediff maps, L1/L4 norms, 2x multi-scale rollup).
+- psi_ks_check: PSI + KS over per-partition text-length histograms.
+- emb_drift_check: cosine between per-partition channel-vector centroids.
+- psi_emb_fused_check: both of the above from one scan per side.
 
-plus PSI/KS over per-partition histograms (classic drift stats over the
-same merged-count machinery). Everything is DataFrame ops — the only
-shuffles are the pair join, the per-scale row_number windows (partitioned
-by conversation — bounded), and the final per-partition agg.
+Every histogram and centroid is a map-side-combinable per-partition
+aggregate, so nothing here grows with corpus size beyond one small
+shuffle per side.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..config import CheckSuiteConfig
 from ..constants import (
-    C2,
     CALIB_CUBIC_1,
     CALIB_CUBIC_2,
     CALIB_CUBIC_3,
     CALIB_LINEAR,
     CALIB_POW,
-    KERNEL_TAPS,
+    default_weights,
 )
 from .checks import CheckOutput
-
-
-def featurize(df: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:
-    """Pivot the prepared channel columns (ch_<name>, computed once in
-    checks.prepare — ≙ xyb_to_planar lib.rs:137-155) to long format:
-    (partition_id, conv_id, turn_idx, channel, v), v in ~[0, 1]."""
-    chans = list(cfg.channels)
-    # ch_<name> are f32 (see drift_arrow.channel_expr); upcast here so all
-    # windowed-moment arithmetic runs in f64 over the f32-quantized values,
-    # matching the Arrow path and the oracle exactly
-    stack_args = ", ".join(f"'{c}', CAST(ch_{c} AS DOUBLE)" for c in chans)
-    return df.selectExpr(
-        "partition_id",
-        "conv_id",
-        "turn_idx",
-        f"stack({len(chans)}, {stack_args}) AS (channel, v)",
-    )
-
-
-def pair(ref_f: DataFrame, cand_f: DataFrame) -> DataFrame:
-    """Aligned pair join (inner: missing/added rows are text_parity's job)."""
-    c = cand_f.select("conv_id", "turn_idx", "channel", F.col("v").alias("v2"))
-    return (
-        ref_f.withColumnRenamed("v", "v1")
-        .join(c, ["conv_id", "turn_idx", "channel"])
-        .select(
-            "partition_id",
-            "conv_id",
-            "channel",
-            F.col("turn_idx").cast("long").alias("idx"),
-            "v1",
-            "v2",
-        )
-    )
-
-
-def downsample_2x(paired: DataFrame) -> DataFrame:
-    """Edge-clamped pairwise mean along the turn axis per (conv, channel)
-    (≙ downscale_by_2 lib.rs:165-195; clamp lib.rs:181-182): odd tails pair
-    with themselves via lead(..) default."""
-    w = Window.partitionBy("conv_id", "channel").orderBy("idx")
-    d = paired.withColumn("rn", F.row_number().over(w) - 1)
-    wl = Window.partitionBy("conv_id", "channel").orderBy("rn")
-    out = (
-        d.withColumn("v1n", F.coalesce(F.lead("v1").over(wl), F.col("v1")))
-        .withColumn("v2n", F.coalesce(F.lead("v2").over(wl), F.col("v2")))
-        .filter(F.col("rn") % 2 == 0)
-        .select(
-            "partition_id",
-            "conv_id",
-            "channel",
-            F.floor(F.col("rn") / 2).alias("idx"),
-            ((F.col("v1") + F.col("v1n")) / 2.0).alias("v1"),
-            ((F.col("v2") + F.col("v2n")) / 2.0).alias("v2"),
-        )
-    )
-    return out
-
-
-def _w() -> Window:
-    # built lazily: Window specs need an active SparkSession
-    return Window.partitionBy("conv_id", "channel").orderBy("idx")
-
-
-def _kernel_sum(col: str, taps: list[float]) -> Column:
-    """Sum_i w_i * series[n+i] with NULL-skip (edge)."""
-    r = len(taps) // 2
-    w_spec = _w()
-    terms = []
-    for i in range(-r, r + 1):
-        w = taps[i + r]
-        if i < 0:
-            c = F.lag(col, -i).over(w_spec)
-        elif i > 0:
-            c = F.lead(col, i).over(w_spec)
-        else:
-            c = F.col(col)
-        terms.append(F.coalesce(F.lit(w) * c, F.lit(0.0)))
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
-def _presence_denom(taps: list[float]) -> Column:
-    """Sum of tap weights whose neighbor exists — the edge renormalization
-    (reference zero-pads, gaussian.rs:50-61; Spark frames shrink, so we
-    renormalize: SURVEY §7.2)."""
-    r = len(taps) // 2
-    w_spec = _w()
-    terms = []
-    for i in range(-r, r + 1):
-        w = taps[i + r]
-        if i < 0:
-            c = F.lag("v1", -i).over(w_spec)
-        elif i > 0:
-            c = F.lead("v1", i).over(w_spec)
-        else:
-            c = F.col("v1")
-        terms.append(F.when(c.isNotNull(), F.lit(w)).otherwise(F.lit(0.0)))
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
-def windowed_moments(paired: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:
-    """The 5 smoothings of the reference (blur of v1, v2, v1^2, v2^2, v1*v2
-    — lib.rs:95-105) as kernel-weighted window sums sharing one
-    renormalization denominator."""
-    taps = KERNEL_TAPS
-    d = paired.select(
-        "partition_id",
-        "conv_id",
-        "channel",
-        "idx",
-        "v1",
-        "v2",
-        (F.col("v1") * F.col("v1")).alias("v11"),
-        (F.col("v2") * F.col("v2")).alias("v22"),
-        (F.col("v1") * F.col("v2")).alias("v12"),
-    )
-    den = _presence_denom(taps)
-    return d.select(
-        "partition_id",
-        "conv_id",
-        "channel",
-        "idx",
-        "v1",
-        "v2",
-        (_kernel_sum("v1", taps) / den).alias("mu1"),
-        (_kernel_sum("v2", taps) / den).alias("mu2"),
-        (_kernel_sum("v11", taps) / den).alias("s11"),
-        (_kernel_sum("v22", taps) / den).alias("s22"),
-        (_kernel_sum("v12", taps) / den).alias("s12"),
-    )
-
-
-def scale_metrics(moments: DataFrame, scale: int) -> DataFrame:
-    """ssim + edgediff error maps -> L1/L4 norms per (partition, channel)
-    (lib.rs:197-299). Long metrics: (partition_id, channel, scale, map,
-    norm, value)."""
-    mu1, mu2 = F.col("mu1"), F.col("mu2")
-    num_m = 1.0 - (mu1 - mu2) * (mu1 - mu2)
-    num_s = 2.0 * (F.col("s12") - mu1 * mu2) + C2
-    den_s = (F.col("s11") - mu1 * mu1) + (F.col("s22") - mu2 * mu2) + C2
-    d_ssim = F.greatest(F.lit(0.0), 1.0 - (num_m * num_s) / den_s)
-    d1 = (1.0 + F.abs(F.col("v2") - mu2)) / (1.0 + F.abs(F.col("v1") - mu1)) - 1.0
-    maps = moments.select(
-        "partition_id",
-        "channel",
-        d_ssim.alias("ssim"),
-        F.greatest(d1, F.lit(0.0)).alias("artifact"),
-        F.greatest(-d1, F.lit(0.0)).alias("detail"),
-    )
-    agg = maps.groupBy("partition_id", "channel").agg(
-        F.avg("ssim").alias("ssim_l1"),
-        F.pow(F.avg(F.pow("ssim", 4)), 0.25).alias("ssim_l4"),
-        F.avg("artifact").alias("artifact_l1"),
-        F.pow(F.avg(F.pow("artifact", 4)), 0.25).alias("artifact_l4"),
-        F.avg("detail").alias("detail_l1"),
-        F.pow(F.avg(F.pow("detail", 4)), 0.25).alias("detail_l4"),
-    )
-    return agg.selectExpr(
-        "partition_id",
-        "channel",
-        f"{scale} AS scale",
-        "stack(6, 'ssim','l1',ssim_l1, 'ssim','l4',ssim_l4,"
-        " 'artifact','l1',artifact_l1, 'artifact','l4',artifact_l4,"
-        " 'detail','l1',detail_l1, 'detail','l4',detail_l4) AS (map, norm, value)",
-    )
 
 
 def calibrated_score(metrics: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:
     """Broadcast-weighted 108-term reduce + nonlinear calibration
     (lib.rs:344-487). Returns (partition_id, score)."""
-    from ..constants import default_weights
-
     spark = metrics.sparkSession
     wdf = spark.createDataFrame(
         default_weights(cfg.channels, cfg.num_scales),
@@ -227,37 +52,6 @@ def calibrated_score(metrics: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:
     cubic = CALIB_CUBIC_3 * sc * sc * sc + CALIB_CUBIC_2 * sc * sc + CALIB_CUBIC_1 * sc
     score = F.when(cubic > 0.0, 100.0 - 10.0 * F.pow(cubic, CALIB_POW)).otherwise(F.lit(100.0))
     return s.select("partition_id", score.alias("score"))
-
-
-def drift_score_check(
-    ref: DataFrame, cand: DataFrame, parts: DataFrame, cfg: CheckSuiteConfig
-) -> CheckOutput:
-    ref_f = featurize(ref, cfg)
-    cand_f = featurize(cand, cfg)
-    paired = pair(ref_f, cand_f)
-    all_metrics = []
-    cur = paired
-    for s in range(cfg.num_scales):
-        if s > 0:
-            cur = downsample_2x(cur)
-        m = windowed_moments(cur, cfg)
-        all_metrics.append(scale_metrics(m, s))
-    metrics = all_metrics[0]
-    for m in all_metrics[1:]:
-        metrics = metrics.unionByName(m)
-    scores = calibrated_score(metrics, cfg)
-    verdicts = (
-        parts.select("partition_id")
-        .join(scores, "partition_id", "left")
-        .select(
-            F.col("partition_id").cast("int"),
-            F.lit("drift_score").alias("check_id"),
-            F.coalesce(F.col("score") >= cfg.score_threshold, F.lit(True)).alias("passed"),
-            F.lit(0).cast("long").alias("n_violations"),
-            F.col("score").cast("double").alias("score"),
-        )
-    )
-    return CheckOutput(verdicts=verdicts, metrics=metrics)
 
 
 # --------------------------------------------------------------------------

@@ -1,8 +1,8 @@
-"""Arrow-vectorized drift scoring — the engine's fast path.
+"""Arrow-vectorized drift scoring — the engine's one drift_score kernel.
 
-Same math as operators/drift.py (and the pandas oracle), executed as ONE
-applyInPandas over partition buckets instead of 4-6 scales x 6 windowed
-series of Spark window expressions:
+The SSIMULACRA2 pipeline (≙ lib.rs:84-487; the pandas oracle in oracle.py
+computes the same math) executed as ONE applyInPandas over partition
+buckets:
 
   featurize in Spark expressions (JVM, codegen) -> pair join ->
   one shuffle by partition_id -> per-batch numpy computes masked
@@ -57,8 +57,8 @@ _PARTIAL_SCHEMA = StructType(
 
 
 def channel_expr(text_col: str, channel: str):
-    """Feature channel as a Catalyst expression (shared by the window impl
-    and the Arrow impl so both produce identical inputs).
+    """Feature channel as a Catalyst expression (computed once per side in
+    checks.prepare and shared by the drift checks).
 
     Emitted as FLOAT, not double: channel values live in ~[0,1] with a few
     significant digits, so f32's 24-bit mantissa is lossless headroom — and
@@ -314,51 +314,13 @@ def _with_chunks(paired: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:
     )
 
 
-_DEFAULT_AUTO_CHUNK = 65_536
-
-
-def _probe_chunking(ref_side: DataFrame, cand_side: DataFrame, cfg: CheckSuiteConfig) -> bool:
-    """Driver-side skew probe: should THIS corpus run the chunked kernel?
-
-    Returns True iff some conversation on EITHER side exceeds
-    cfg.drift_hot_turns (map-combinable max-of-counts over conv-pruned
-    scans; the collected result is a single scalar — control flow, not
-    data movement, same category as dedup_clusters' convergence sum).
-    Grouping is on the full (conv_key, conv_key2) 128-bit join key — a
-    64-bit-only probe could merge two colliding conversations and flip the
-    plan choice (results stay exact either way; this only picks the plan),
-    and a cand-only giant conversation previously escaped the probe.
-
-    Why plan-level choice instead of row-level hot/cold routing: a split
-    design (tag hot conversations, send them through the chunked kernel and
-    the rest through the plain one) was BUILT AND MEASURED here — it cost
-    ~+10s on the 8M-turn bench against a ~1.5s straggler saving, because
-    the two filtered consumers re-merge/re-sort the pair join and defeat
-    parts of AQE's stage reuse, a tax on ALL rows in every case. All-rows
-    chunking costs ~+3s on the same corpus; the plain kernel's worst case
-    (one 400k-turn conversation in one pandas batch) costs ~1.5-2.5s. So
-    the only decision worth making is corpus-level: if the longest
-    conversation dwarfs a kernel batch, chunk EVERYTHING (measured 1.8-2.3x
-    faster when one conversation IS the workload); otherwise stay plain.
-    One scalar probe, zero plan complexity, no always-on tax."""
-    per_conv = lambda side: side.groupBy("conv_key", "conv_key2").agg(  # noqa: E731
-        F.count("*").alias("n_t")
-    )
-    mx = (
-        per_conv(ref_side)
-        .unionByName(per_conv(cand_side))
-        .agg(F.max("n_t").alias("mx"))
-        .collect()[0]["mx"]
-    )
-    return mx is not None and mx > cfg.drift_hot_turns
-
-
 def drift_score_check_arrow(
     ref: DataFrame, cand: DataFrame, parts: DataFrame, cfg: CheckSuiteConfig
 ):
-    """Arrow fast path; same CheckOutput contract and same math as
-    operators.drift.drift_score_check (pytest pins both against the pandas
-    oracle)."""
+    """drift_score verdicts: per-partition calibrated SSIMULACRA2-style
+    score over the paired channel series, passing at cfg.score_threshold.
+    Pinned to the pandas oracle at 1e-9
+    (tests/test_engine_vs_oracle.py::test_drift_scores_match_oracle)."""
     from .checks import CheckOutput
     from .drift import calibrated_score
 
@@ -387,18 +349,8 @@ def drift_score_check_arrow(
         *[F.col(f"ch_{ch}").alias(f"v2_{ch}") for ch in cfg.channels],
     )
     paired = r.join(c, ["conv_key", "conv_key2", "turn_idx"])
-    chunk = cfg.drift_chunk_turns
-    if cfg.drift_hot_turns and not chunk:
-        # adaptive plan choice: probe the corpus for a conversation long
-        # enough that chunking's all-rows tax beats the plain kernel's
-        # straggler (see _probe_chunking for the measured trade)
-        if _probe_chunking(r, c, cfg):
-            chunk = _DEFAULT_AUTO_CHUNK
-    if chunk:
-        from dataclasses import replace
-
-        ccfg = replace(cfg, drift_chunk_turns=chunk)
-        partials = drift_partials_chunked(_with_chunks(paired, ccfg), ccfg)
+    if cfg.drift_chunk_turns:
+        partials = drift_partials_chunked(_with_chunks(paired, cfg), cfg)
     else:
         partials = drift_partials(paired, cfg)
     metrics = (

@@ -30,40 +30,15 @@ from pyspark.sql import functions as F
 
 from ..config import CheckSuiteConfig
 from ..operators import checks as C
-from ..operators.drift import (
-    drift_score_check,
-    emb_drift_check,
-    psi_emb_fused_check,
-    psi_ks_check,
-)
+from ..operators.drift import emb_drift_check, psi_emb_fused_check, psi_ks_check
+from ..operators.drift_arrow import drift_score_check_arrow
 from ..operators.stats import column_stats
 from ..sources.tableio import ParquetTableIO
 
 
 class ValidationSuite:
-    # Compiled check-graph reuse (compile once, execute per batch — the
-    # Structured Streaming shape). run() with io=None is referentially
-    # transparent in (spark, ref, cand, cfg, run_id): it returns LAZY
-    # plans that recompute from the inputs on every action, but BUILDING
-    # the ~200-operator graph costs ~1.4 s of single-threaded driver time
-    # (Py4J round-trips + per-step analysis) — dead cores before the
-    # first job of every repeated validation of the same snapshot pair.
-    # The cache stores only the compiled DataFrames (plans), never data:
-    # a caller's clearCache() drops the persisted violations blocks as
-    # before, and the next action rebuilds them from the parquet inputs
-    # (pinned by tests/test_golden.py::test_graph_reuse_recomputes).
-    # Keyed on input DataFrame identity (strong refs kept so ids are
-    # stable) + the cfg field values at call time; bounded LRU.
-    _graph_cache: "dict[tuple, tuple]" = {}
-    _GRAPH_CACHE_MAX = 8
-
     def __init__(self, cfg: CheckSuiteConfig | None = None):
         self.cfg = cfg or CheckSuiteConfig()
-
-    def _graph_key(self, spark, ref, cand, run_id):
-        from dataclasses import astuple
-
-        return (id(spark), id(ref), id(cand), astuple(self.cfg), run_id)
 
     def run(
         self,
@@ -78,28 +53,6 @@ class ValidationSuite:
         already-committed partitions are skipped."""
         cfg = self.cfg
         nb = max(1, cfg.commit_batches) if io is not None else 1
-        if nb == 1 and io is None:
-            key = self._graph_key(spark, ref, cand, run_id)
-            hit = ValidationSuite._graph_cache.get(key)
-            if hit is not None and hit[0] is ref and hit[1] is cand:
-                _, _, verdicts, violations, was_persisted = hit
-                if was_persisted:
-                    # the caller may have dropped the cached blocks since
-                    # the graph was compiled; re-register the persist
-                    # marker (no-op if still registered)
-                    from pyspark import StorageLevel
-
-                    if violations.storageLevel == StorageLevel(False, False, False, False, 1):
-                        violations.persist()
-                return verdicts, violations
-            verdicts, violations = self._run_slice(spark, ref, cand, io, run_id, None)
-            if len(ValidationSuite._graph_cache) >= ValidationSuite._GRAPH_CACHE_MAX:
-                ValidationSuite._graph_cache.pop(next(iter(ValidationSuite._graph_cache)))
-            from pyspark import StorageLevel
-
-            was_persisted = violations.storageLevel != StorageLevel(False, False, False, False, 1)
-            ValidationSuite._graph_cache[key] = (ref, cand, verdicts, violations, was_persisted)
-            return verdicts, violations
         if nb == 1:
             return self._run_slice(spark, ref, cand, io, run_id, None)
         all_v: list[DataFrame] = []
@@ -140,22 +93,6 @@ class ValidationSuite:
             done = F.broadcast(done)
             ref = ref.join(done, "partition_id", "left_anti")
             cand = cand.join(done, "partition_id", "left_anti")
-
-        if cfg.cache_mode == "memory":
-            ref = ref.persist()
-            cand = cand.persist()
-        elif cfg.cache_mode == "staging":
-            import tempfile
-
-            d = cfg.staging_dir or tempfile.mkdtemp(prefix="suite_staging_")
-            # slice-suffixed dirs: the returned DataFrames stay lazy after
-            # this slice's commit, so a later slice must never overwrite a
-            # staging path an earlier slice's plan still reads
-            sfx = f"_{batch[0]}" if batch is not None else ""
-            ref.write.mode("overwrite").parquet(f"{d}/ref_{run_id}{sfx}")
-            cand.write.mode("overwrite").parquet(f"{d}/cand_{run_id}{sfx}")
-            ref = spark.read.parquet(f"{d}/ref_{run_id}{sfx}")
-            cand = spark.read.parquet(f"{d}/cand_{run_id}{sfx}")
 
         ref_parts = C.partition_counts(ref).cache()
         cand_parts = C.partition_counts(cand).cache()
@@ -237,12 +174,7 @@ class ValidationSuite:
         elif "emb_drift" in enabled:
             outputs.append(emb_drift_check(ref, cand, parts, cfg))
         if "drift_score" in enabled:
-            if cfg.drift_impl == "arrow":
-                from ..operators.drift_arrow import drift_score_check_arrow
-
-                outputs.append(drift_score_check_arrow(ref, cand, parts, cfg))
-            else:
-                outputs.append(drift_score_check(ref, cand, parts, cfg))
+            outputs.append(drift_score_check_arrow(ref, cand, parts, cfg))
 
         if outputs:
             verdicts = reduce(DataFrame.unionByName, [o.verdicts for o in outputs])

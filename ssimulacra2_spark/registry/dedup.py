@@ -664,7 +664,6 @@ def _star_edges_df(
     return star.unionByName(star.select(F.col("v").alias("u"), F.col("u").alias("v")))
 
 
-@(lambda fn: (QUERIES.__setitem__("dedup_clusters", fn), fn)[1])
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the MinHash-LSH bucket graph, electing
     one keeper per duplicate cluster (min doc_id = cluster id).
@@ -675,101 +674,18 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic in clique size (see _star_edges_ctes — 4.3M pairs vs ~10k
     star edges on the sf0.1 corpus).
 
-    Spark path: iterative min-label propagation — each round every node
-    takes the min of its own label and its neighbors' labels (two hops
-    plus one pointer jump per checked round); terminates when the label
-    sum stops changing (labels are monotone non-increasing, so the sum
-    is a convergence certificate). Each round breaks lineage via
-    localCheckpoint. For unbounded-diameter graphs (adversarial near-dup
-    chains at the 10^12-row design point) use dedup_clusters_star below
-    — the implemented large-star/small-star alternation (operators/cc.py),
-    O(log^2 n) rounds of uniform-key shuffles on any graph; pytest pins
-    label equality between the two on the same LSH fixture
-    (tests/test_properties.py).
-
-    r06 iteration-cost lessons (measured at sf1/32c):
-    - the edge set is CHECKPOINTED, not persisted: a persisted DF keeps
-      its whole Catalyst lineage, and every round re-plans (and round 0
-      partially re-executes) the full signature pipeline — loop went
-      17.5 s -> 4.6 s from this one change;
-    - AQE rebalance before the checkpoint right-sizes the cached edge
-      partitions from the advisory size (the 128-partition layout the
-      distinct+union left behind made every round ~10 stages x 128
-      tiny tasks) — scale-adaptive, no local constant;
-    - only the canonical star half is materialized; the symmetric view
-      is a lazy union over the cached RDD.
+    Spark path: alternating large-star/small-star rounds (operators/cc.py
+    — Kiveris et al. SoCC'14), O(log^2 n) rounds of uniform-key shuffles
+    on ANY graph shape, including the adversarial near-dup chains of the
+    10^12-row design point (tests/test_cc.py::test_star_cc_deep_chain).
 
     Oracle: DuckDB recursive CTE computing min reachable node per node
-    over the same star edges."""
-    edges = (
-        _star_edges_df(spark, sf_dir, symmetric=False)
-        .hint("rebalance")
-        .localCheckpoint()
-    )
-    sym = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    labels = (
-        edges.select(F.col("u").alias("node"))
-        .unionByName(edges.select(F.col("v").alias("node")))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
+    over the same star edges. Registered under two ids, dedup_clusters
+    and dedup_clusters_star, which share that oracle."""
+    from ..operators.cc import connected_components_star
 
-    def propagate(lbl: DataFrame) -> DataFrame:
-        nbr_min = (
-            sym.join(
-                lbl.select(F.col("node").alias("v"), F.col("label").alias("v_label")),
-                "v",
-            )
-            .groupBy("u")
-            .agg(F.min("v_label").alias("nbr_label"))
-        )
-        return lbl.join(nbr_min.withColumnRenamed("u", "node"), "node", "left").select(
-            "node",
-            F.least(
-                F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-            ).alias("label"),
-        )
-
-    def jump(lbl: DataFrame) -> DataFrame:
-        # pointer jump (path doubling): label'[x] = min(label[x],
-        # label[label[x]]). label[y] <= y for every y (labels start at
-        # the node id and only decrease), so the step is element-wise
-        # monotone non-increasing and the sum certificate stays valid;
-        # label values are always node ids of the same component, so the
-        # fixed point is unchanged. Turns the O(diameter) hop count into
-        # O(log diameter) checked rounds — measured 7 rounds -> 3 on the
-        # sf0.1 bucket graph (diameter ~13, not the 2-4 the star
-        # intuition suggests: hubs chain through shared docs).
-        l2 = lbl.select(F.col("node").alias("jn"), F.col("label").alias("jl"))
-        return lbl.join(l2, lbl["label"] == l2["jn"], "left").select(
-            "node",
-            F.least(F.col("label"), F.coalesce(F.col("jl"), F.col("label"))).alias(
-                "label"
-            ),
-        )
-
-    prev_sum = None
-    converged = False
-    # labels are monotone non-increasing, so an unchanged label sum is a
-    # convergence certificate. Iterate UNTIL it fires (2 neighbor hops +
-    # one pointer jump per checked round); the cap is a runaway backstop,
-    # and hitting it without the certificate raises rather than silently
-    # returning unconverged ids.
-    for _ in range(64):
-        labels = jump(propagate(propagate(labels))).localCheckpoint()
-        s = labels.agg(F.sum("label").alias("s")).collect()[0]["s"]
-        if s == prev_sum:
-            converged = True
-            break
-        prev_sum = s
-    if not converged:
-        raise RuntimeError(
-            "dedup_clusters: label propagation did not converge within 64 "
-            "rounds (128 hops) — component diameter beyond any plausible "
-            "LSH bucket graph; investigate the edge set"
-        )
+    edges = _star_edges_df(spark, sf_dir, symmetric=False)
+    labels, _rounds = connected_components_star(edges, canonical=True)
     return labels.select(
         F.col("node").alias("doc_id"),
         F.col("label").alias("cluster_id"),
@@ -789,32 +705,8 @@ SELECT node AS doc_id, MIN(label) AS cluster_id,
 FROM walk GROUP BY node
 """
 
-ORACLES["dedup_clusters"] = _CLUSTERS_ORACLE
-
-
-@(lambda fn: (QUERIES.__setitem__("dedup_clusters_star", fn), fn)[1])
-def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_clusters via alternating large-star/small-star rounds
-    (operators/cc.py — Kiveris et al. SoCC'14): identical output
-    contract (doc_id, cluster_id, is_keeper) over the same LSH
-    bucket-star edges, but O(log^2 n) convergence on ANY graph shape —
-    the variant that survives adversarial near-dup chains at 10^12
-    rows, where min-label propagation's O(diameter) rounds do not.
-    Verified three ways: this full DuckDB recursive-CTE oracle, pytest
-    label equality with dedup_clusters, and a deep-chain fixture where
-    propagation's round budget would be exceeded (test_properties.py)."""
-    from ..operators.cc import connected_components_star
-
-    edges = _star_edges_df(spark, sf_dir, symmetric=False)
-    labels, _rounds = connected_components_star(edges, canonical=True)
-    return labels.select(
-        F.col("node").alias("doc_id"),
-        F.col("label").alias("cluster_id"),
-        (F.col("node") == F.col("label")).alias("is_keeper"),
-    )
-
-
-ORACLES["dedup_clusters_star"] = _CLUSTERS_ORACLE
+QUERIES["dedup_clusters"] = QUERIES["dedup_clusters_star"] = dedup_clusters
+ORACLES["dedup_clusters"] = ORACLES["dedup_clusters_star"] = _CLUSTERS_ORACLE
 
 
 @(lambda fn: (QUERIES.__setitem__("dedup_clusters_prod", fn), fn)[1])

@@ -10,12 +10,35 @@ drivers/executors.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """SPARK_GRAFT_CPUS if set, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def driver_memory(meminfo: str | None = None) -> str:
+    """Driver heap size: SPARK_GRAFT_DRIVER_MEM if set, else about half of
+    MemAvailable (from `meminfo`, default /proc/meminfo), between 1g and
+    16g. The heap is pre-touched at boot (see get_spark), so it must fit
+    in memory that is free now, not in the machine's total."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    if meminfo is None:
+        try:
+            with open("/proc/meminfo") as f:
+                meminfo = f.read()
+        except OSError:
+            meminfo = ""
+    m = re.search(r"^MemAvailable:\s+(\d+) kB", meminfo, re.MULTILINE)
+    if m is None:
+        return "1g"
+    half_mb = int(m.group(1)) // 1024 // 2
+    return f"{min(max(half_mb, 1024), 16 * 1024)}m"
 
 
 def tune_process_env() -> None:
@@ -52,6 +75,7 @@ def get_spark(
     # At 100 TB shuffle_partitions is sized to keep post-shuffle partitions
     # ~128-256 MB (AQE coalesces down); locally 2x cores keeps all lanes busy.
     shuffle_partitions = shuffle_partitions or max(2 * cores, 8)
+    heap = driver_memory()
     b = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")
@@ -84,7 +108,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", heap)
         # -Xms=-Xmx + pre-touch: the heap faults in once at JVM boot. This
         # sandbox VM services first-touch page faults through an
         # intermittently serialized hypervisor path (~1-2 GB/s, no parallel
@@ -93,7 +117,7 @@ def get_spark(
         # 70-88% of ALL cpus in sys time before this flag.
         .config(
             "spark.driver.extraJavaOptions",
-            f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '16g')} -XX:+AlwaysPreTouch",
+            f"-Xms{heap} -XX:+AlwaysPreTouch",
         )
         .config("spark.local.dir", local_dirs())
         .config("spark.ui.enabled", "false")

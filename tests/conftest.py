@@ -18,14 +18,11 @@ def spark():
 
 
 @pytest.fixture(scope="session")
-def synth_tables(spark, tmp_path_factory):
-    """Seeded transcript pair written to parquet + Spark DataFrames +
-    the conv -> partition mapping the pandas oracle needs."""
+def synth_cfg():
+    """The suite config every synth-pair test runs with."""
     from ssimulacra2_spark.config import CheckSuiteConfig
-    from ssimulacra2_spark.operators.checks import with_partition_id
-    from ssimulacra2_spark.synth import synth_pair
 
-    cfg = CheckSuiteConfig(
+    return CheckSuiteConfig(
         n_buckets=8,
         min_rows_per_partition=8,
         num_scales=4,
@@ -35,6 +32,16 @@ def synth_tables(spark, tmp_path_factory):
         # default is the cheap ('len', 'hash') pair)
         emb_channels=("len", "tok"),
     )
+
+
+@pytest.fixture(scope="session")
+def synth_tables(spark, synth_cfg, tmp_path_factory):
+    """Seeded transcript pair written to parquet + Spark DataFrames +
+    the conv -> partition mapping the pandas oracle needs."""
+    from ssimulacra2_spark.operators.checks import with_partition_id
+    from ssimulacra2_spark.synth import synth_pair
+
+    cfg = synth_cfg
     drift_convs = {f"c{i:06d}" for i in range(5, 9)}
     res = synth_pair(n_convs=60, seed=42, hot_convs=1, hot_turns=400, drift_convs=drift_convs)
     d = tmp_path_factory.mktemp("synth")

@@ -1,7 +1,8 @@
 """Large-star/small-star connected components (operators/cc.py):
-exact equality with min-label propagation and with a driver-side
-union-find, plus the deep-chain case where propagation's O(diameter)
-round budget would be exceeded but star CC converges in O(log^2 n)."""
+exact equality with a driver-side union-find, on the LSH fixture's
+bucket-star edges and on random graphs, plus the deep-chain case where
+min-label propagation's O(diameter) rounds would be unbounded but star
+CC converges in O(log^2 n)."""
 
 from __future__ import annotations
 
@@ -41,29 +42,29 @@ def _labels(spark, edges):
     return {r.node: r.label for r in out.collect()}, rounds
 
 
-def test_star_cc_equals_propagation_on_lsh_fixture(spark):
-    """Same LSH bucket-star edges, two engines: the shipped min-label
-    propagation (dedup_clusters) and the large-star/small-star loop
-    (dedup_clusters_star) must produce identical cluster ids and keepers."""
-    from ssimulacra2_spark.registry.dedup import QUERIES
+def test_star_cc_equals_union_find_on_lsh_fixture(spark):
+    """dedup_clusters over the LSH fixture must equal a driver-side
+    union-find over the same bucket-star edges: cluster id = component
+    minimum, keeper = the node that is its own cluster id."""
+    from ssimulacra2_spark.registry.dedup import QUERIES, _star_edges_df
 
-    prop = {
-        (r.doc_id): (r.cluster_id, r.is_keeper)
+    edges = [
+        (r.u, r.v) for r in _star_edges_df(spark, SF_DIR, symmetric=False).collect()
+    ]
+    want = {n: (lbl, n == lbl) for n, lbl in _union_find(edges).items()}
+    got = {
+        r.doc_id: (r.cluster_id, r.is_keeper)
         for r in QUERIES["dedup_clusters"](spark, SF_DIR).collect()
     }
-    star = {
-        (r.doc_id): (r.cluster_id, r.is_keeper)
-        for r in QUERIES["dedup_clusters_star"](spark, SF_DIR).collect()
-    }
-    assert prop == star
-    assert len(prop) > 0
+    assert got == want
+    assert len(got) > 0
 
 
 def test_star_cc_deep_chain(spark):
     """A 400-node path graph (adversarial near-dup chain): diameter 399
-    exceeds dedup_clusters' 128-hop budget (64 rounds x 2 hops), but the
-    star alternation must finish in O(log^2 n) — well under 12 rounds —
-    with every node labeled by the chain minimum."""
+    would take min-label propagation hundreds of hops, but the star
+    alternation must finish in O(log^2 n) — well under 12 rounds — with
+    every node labeled by the chain minimum."""
     n = 400
     labels, rounds = _labels(spark, [(i, i + 1) for i in range(n - 1)])
     assert rounds <= 12, rounds

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from ssimulacra2_spark import oracle
 from ssimulacra2_spark.operators import checks as C
-from ssimulacra2_spark.operators.drift import drift_score_check
 from ssimulacra2_spark.plans.suite import ValidationSuite
 
 
@@ -88,10 +87,9 @@ def test_row_parity_counts(suite_out, synth_tables):
         assert r.passed == (want == 0)
 
 
-@pytest.mark.parametrize("impl", ["window", "arrow"])
-def test_drift_scores_match_oracle(spark, synth_tables, impl):
-    """Both drift implementations (pure-window and Arrow-kernel) must match
-    the pandas oracle to 1e-9 relative."""
+def test_drift_scores_match_oracle(spark, synth_tables):
+    """The Arrow drift kernel must match the pandas oracle to 1e-9
+    relative."""
     from ssimulacra2_spark.operators.drift_arrow import drift_score_check_arrow
 
     t = synth_tables
@@ -99,8 +97,7 @@ def test_drift_scores_match_oracle(spark, synth_tables, impl):
     ref_p = C.prepare(t["ref"].drop("partition_id"), cfg)
     cand_p = C.prepare(t["cand"].drop("partition_id"), cfg)
     parts = C.partition_counts(ref_p)
-    fn = drift_score_check_arrow if impl == "arrow" else drift_score_check
-    out = fn(ref_p, cand_p, parts, cfg)
+    out = drift_score_check_arrow(ref_p, cand_p, parts, cfg)
     got = {r.partition_id: r.score for r in out.verdicts.collect()}
     want = oracle.drift_scores(t["res"].ref, t["res"].cand, cfg, t["partition_of"])
     assert set(got) == set(want)

@@ -90,13 +90,12 @@ def test_fused_order_unique_single_fact_exchange(spark):
     assert len(re.findall(r"\bWindow ", p)) == 3
 
 
-def test_drift_probe_selects_plan_not_row_split(spark):
-    """drift_hot_turns is a PLAN choice (probe -> whole kernel chunked or
-    plain), never a row-level hot/cold split: the split design measured
-    ~+10s on the bench (it re-merges the pair join per consumer). Exactly
-    ONE FlatMapGroupsInPandas must appear either way; the probe flips the
-    halo Generate (explode) on only when a conversation exceeds the
-    threshold."""
+def test_drift_chunking_is_plan_not_row_split(spark):
+    """drift_chunk_turns is a PLAN choice (whole kernel chunked or plain),
+    never a row-level hot/cold split: the split design measured ~+10s on
+    the bench (it re-merges the pair join per consumer). Exactly ONE
+    FlatMapGroupsInPandas must appear either way; the halo Generate
+    (explode) appears only when chunking."""
     import pyspark.sql.functions as F
 
     from ssimulacra2_spark.config import CheckSuiteConfig
@@ -116,15 +115,15 @@ def test_drift_probe_selects_plan_not_row_split(spark):
     )
     from dataclasses import replace
 
-    for hot, expect_chunked in ((100, True), (10**9, False)):
-        cfg = replace(base, drift_hot_turns=hot)
+    for chunk in (0, 256):
+        cfg = replace(base, drift_chunk_turns=chunk)
         ref, cand = prepare(df, cfg), prepare(df, cfg)
         out = drift_score_check_arrow(
             ref, cand, partition_counts(ref).select("partition_id"), cfg
         )
         p = _plan(out.verdicts)
-        assert p.count("FlatMapGroupsInPandas") == 1, hot
-        assert ("explode(" in p) == expect_chunked, hot  # the halo duplication
+        assert p.count("FlatMapGroupsInPandas") == 1, chunk
+        assert ("explode(" in p) == bool(chunk), chunk  # the halo duplication
 
 
 def _window_specs(plan: str) -> list[tuple[tuple[str, ...], tuple[str, ...]]]:

@@ -112,7 +112,7 @@ def test_drift_chunked_matches_unchunked(spark):
 
     from ssimulacra2_spark.config import CheckSuiteConfig
     from ssimulacra2_spark.operators.checks import partition_counts, prepare
-    from ssimulacra2_spark.operators.drift_arrow import halo_turns
+    from ssimulacra2_spark.operators.drift_arrow import drift_score_check_arrow, halo_turns
 
     rng = np.random.default_rng(17)
     rows_r, rows_c = [], []
@@ -138,21 +138,10 @@ def test_drift_chunked_matches_unchunked(spark):
     cand = prepare(spark.createDataFrame(pd.DataFrame(rows_c, columns=cols)), cfg0)
     parts = partition_counts(ref).select("partition_id")
     scores = []
-    # three paths over identical input:
-    #   plain whole-group kernel,
-    #   forced all-rows chunking (~4-10 chunk boundaries per conversation),
-    #   probe-selected chunking (threshold 1000 < the fixture's longest
-    #   conversation, so the driver-side probe flips the whole plan to the
-    #   chunked kernel at the default auto chunk size)
-    arms = [
-        dict(drift_chunk_turns=0),
-        dict(drift_chunk_turns=256, drift_hot_turns=0),
-        dict(drift_chunk_turns=0, drift_hot_turns=1000),
-    ]
-    for knobs in arms:
-        from ssimulacra2_spark.operators.drift_arrow import drift_score_check_arrow
-
-        cfg = replace(cfg0, **knobs)
+    # two paths over identical input: the plain whole-group kernel and
+    # all-rows chunking (~4-10 chunk boundaries per conversation)
+    for chunk in (0, 256):
+        cfg = replace(cfg0, drift_chunk_turns=chunk)
         out = drift_score_check_arrow(ref, cand, parts, cfg)
         scores.append({r.partition_id: r.score for r in out.verdicts.collect()})
     for other in scores[1:]:

@@ -21,15 +21,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    cores = int(sys.argv[1]) if len(sys.argv) > 1 else 32
-    n_turns = int(sys.argv[2]) if len(sys.argv) > 2 else 8_000_000
-    reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
-    n_convs = max(1000, n_turns // 100)
-
     from ssimulacra2_spark.benchgen import stage_pair
     from ssimulacra2_spark.config import CheckSuiteConfig
     from ssimulacra2_spark.plans.suite import ValidationSuite
-    from ssimulacra2_spark.session import get_spark
+    from ssimulacra2_spark.session import default_parallelism, get_spark
+
+    cores = int(sys.argv[1]) if len(sys.argv) > 1 else default_parallelism()
+    n_turns = int(sys.argv[2]) if len(sys.argv) > 2 else 8_000_000
+    reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
+    n_convs = max(1000, n_turns // 100)
 
     spark = get_spark("ab_layout", cores=cores)
     spark.sparkContext.setLogLevel("ERROR")

@@ -25,14 +25,14 @@ ALL_CHECKS = (
 
 
 def main() -> None:
+    from ssimulacra2_spark.session import default_parallelism, get_spark
+
     p = argparse.ArgumentParser()
     p.add_argument("--turns", type=int, default=8_000_000)
     p.add_argument("--convs", type=int, default=80_000)
-    p.add_argument("--cores", type=int, default=32)
+    p.add_argument("--cores", type=int, default=default_parallelism())
     p.add_argument("--reps", type=int, default=2, help="timed reps (min reported)")
     args = p.parse_args()
-
-    from ssimulacra2_spark.session import get_spark
 
     spark = get_spark("percheck", cores=args.cores,
                       extra_conf={"spark.ui.showConsoleProgress": "false"})

@@ -9,7 +9,7 @@ the log to report, for the timed window only:
   - scheduling gaps between consecutive jobs (driver-side dead time)
   - the top stages by wall with their task counts
 
-Usage:  python tools/profile_suite.py [--turns 8000000] [--cores 32]
+Usage:  python tools/profile_suite.py [--turns 8000000] [--cores N]
 """
 
 from __future__ import annotations
@@ -26,18 +26,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
+    from ssimulacra2_spark.session import default_parallelism, get_spark
+
     p = argparse.ArgumentParser()
     p.add_argument("--turns", type=int, default=8_000_000)
     p.add_argument("--convs", type=int, default=80_000)
-    p.add_argument("--cores", type=int, default=32)
+    p.add_argument("--cores", type=int, default=default_parallelism())
     p.add_argument("--buckets", type=int, default=32)
     p.add_argument("--scales", type=int, default=4)
     p.add_argument("--advisory", default=None, help="AQE advisoryPartitionSizeInBytes, e.g. 8m")
     args = p.parse_args()
 
     evdir = tempfile.mkdtemp(prefix="spark_events_")
-    from ssimulacra2_spark.session import get_spark
-
     spark = get_spark(
         "profile_suite",
         cores=args.cores,
