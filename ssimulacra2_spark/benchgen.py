@@ -100,7 +100,7 @@ def stage_pair(
     pre-sorted (conv, turn) order inside every file are preserved; only a
     giant conversation is cut into file-sized sorted slices. Every
     downstream consumer already exchanges on (conv, chunk)-refined keys
-    (order_unique, drift, salted_conv_agg), so no check relies on
+    (order_unique, drift), so no check relies on
     whole-conversation files. At warehouse scale this is an Iceberg writer
     clustered by bucket(conv_id, turn_bucket) with a target file size,
     which this layout emulates.

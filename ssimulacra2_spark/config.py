@@ -2,11 +2,12 @@
 
 Analog of the reference's YuvConfig metadata record
 (/root/reference/ssimulacra2_bin/src/video.rs:369-386): everything that
-governs interpretation of the raw table — expected schema, vocabularies,
-guards, scale count, thresholds — in one serializable
-object. All scale knobs (buckets, salt fanout, sketch precision) are
-config-driven so the same code path runs at sf0.001 and at 10^12 rows
-(SURVEY §7.2).
+governs interpretation of the raw table — vocabularies, guards, scale
+count, thresholds — in one serializable object. The transcript schema
+itself is fixed: TRANSCRIPT_COLUMNS below is the one statement of the data
+model, and every check reads those column names. All scale knobs
+(buckets, chunk sizes, sketch precision) are config-driven so the same
+code path runs at sf0.001 and at 10^12 rows (SURVEY §7.2).
 """
 
 from __future__ import annotations
@@ -45,10 +46,7 @@ TRANSCRIPT_COLUMNS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
 @dataclass
 class CheckSuiteConfig:
-    # data model
-    key_cols: tuple[str, str] = ("conv_id", "turn_idx")
-    order_col: str = "ts"
-    text_col: str = "text"
+    # vocabularies (the data model is TRANSCRIPT_COLUMNS)
     roles: tuple[str, ...] = DEFAULT_ROLES
     tools: tuple[str, ...] = DEFAULT_TOOLS
 
@@ -71,7 +69,7 @@ class CheckSuiteConfig:
     psi_threshold: float = 0.25
     ks_threshold: float = 0.2
     drift_bins: int = 20
-    # embedding-centroid drift (drift.emb_drift_check): minimum cosine
+    # embedding-centroid drift (drift.psi_emb_fused_check): minimum cosine
     # between the per-partition channel-vector centroids of the two sides
     emb_drift_min_cos: float = 0.995
     # channels forming the per-turn vector for emb_drift. Default is the
@@ -83,12 +81,10 @@ class CheckSuiteConfig:
     # ~+0). Must be a subset of `channels`.
     emb_channels: tuple[str, ...] = ("len", "hash")
 
-    # skew handling: two-phase salted aggregation fanout for hot conv_ids
-    salt_buckets: int = 8
     # monotone check chunking: the adjacent-turn lag runs per
     # (conv_id, turn_idx div monotone_chunk_turns) so a hot conversation
     # spreads over n_turns/chunk tasks; chunk-boundary pairs are checked
-    # over a tiny per-chunk summary (see checks.monotone_ts_violations)
+    # over a tiny per-chunk summary (see checks.order_unique_violations)
     monotone_chunk_turns: int = 8192
 
     # sketch knobs (100 TB path)

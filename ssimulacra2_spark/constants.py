@@ -82,8 +82,6 @@ def default_weights(
     return rows
 
 
-WEIGHTS = default_weights()
-
 # Verdict threshold on the calibrated 0-100 score.  Anchors from the
 # reference README (30=low, 50=medium, 70=high, 90=very high quality,
 # /root/reference/ssimulacra2_bin/README.md:10-15): a partition pair scoring

@@ -14,16 +14,16 @@ Scale notes (100 TB):
   so one repartition(partition_id) feeds all per-partition aggs.
 - all counts are map-side-combinable; the paired join is an equi-join on
   (conv_id, turn_idx) which AQE plans as sort-merge with skew splitting.
-- per-conversation aggregates go through a salted two-phase agg
-  (salted_conv_agg) so a single 10^8-turn conversation cannot stall one
-  reducer.
+- the ordering check lags within (conv_id, turn_idx div chunk) plus a
+  per-chunk boundary summary, so a single 10^8-turn conversation cannot
+  stall one reducer (order_unique_violations).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -83,18 +83,17 @@ def prepare(df: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:
     no check ever shuffles raw text."""
     from .drift_arrow import channel_expr
 
-    t = cfg.text_col
     return with_partition_id(df, cfg).select(
         "partition_id",
         "conv_id",
         "turn_idx",
         "role",
         "tool",
-        F.col(cfg.order_col).alias("ts"),
-        F.length(t).alias("text_len"),
-        F.xxhash64(t).alias("text_h"),
-        F.substring(F.col(t), 1, 48).alias("text_p"),
-        *[channel_expr(t, ch).alias(f"ch_{ch}") for ch in cfg.channels],
+        "ts",
+        F.length("text").alias("text_len"),
+        F.xxhash64("text").alias("text_h"),
+        F.substring(F.col("text"), 1, 48).alias("text_p"),
+        *[channel_expr(ch).alias(f"ch_{ch}") for ch in cfg.channels],
     )
 
 
@@ -115,30 +114,23 @@ def partition_counts(df: DataFrame) -> DataFrame:
     return df.groupBy("partition_id").agg(F.count("*").alias("n_rows"))
 
 
-def verdict_from_violations(
-    partitions: DataFrame, violations: DataFrame, check_id: str
+def verdict(
+    df: DataFrame, check_id: str | Column, passed, n_violations, score
 ) -> DataFrame:
-    """Generic verdict: a partition passes iff it produced no violations.
-    `partitions` must have one row per partition_id (the full universe, so
-    clean partitions still get an explicit PASS row)."""
-    counts = violations.groupBy("partition_id").agg(F.count("*").alias("n_violations"))
-    return (
-        partitions.select("partition_id")
-        .join(counts, "partition_id", "left")
-        .select(
-            F.col("partition_id").cast("int"),
-            F.lit(check_id).alias("check_id"),
-            (F.coalesce(F.col("n_violations"), F.lit(0)) == 0).alias("passed"),
-            F.coalesce(F.col("n_violations"), F.lit(0)).cast("long").alias("n_violations"),
-            F.lit(None).cast("double").alias("score"),
-        )
+    """Project any partition-keyed DataFrame into the canonical verdict
+    schema (VERDICT_SCHEMA's order and types; the verdict twin of _viol)."""
+    return df.select(
+        F.col("partition_id").cast("int"),
+        (F.lit(check_id) if isinstance(check_id, str) else check_id).alias("check_id"),
+        passed.alias("passed"),
+        n_violations.cast("long").alias("n_violations"),
+        score.cast("double").alias("score"),
     )
 
 
 @dataclass
 class CheckOutput:
     verdicts: DataFrame
-    violations: DataFrame | None = None
     metrics: DataFrame | None = None
 
 
@@ -169,17 +161,13 @@ def schema_check(spark, ref: DataFrame, cand: DataFrame, cfg: CheckSuiteConfig) 
 
 
 def min_rows_check(ref_parts: DataFrame, cfg: CheckSuiteConfig) -> CheckOutput:
-    v = ref_parts.select(
-        F.col("partition_id").cast("int"),
-        F.lit("min_rows").alias("check_id"),
-        (F.col("n_rows") >= cfg.min_rows_per_partition).alias("passed"),
-        F.when(
-            F.col("n_rows") >= cfg.min_rows_per_partition, F.lit(0)
-        )
-        .otherwise(F.lit(1))
-        .cast("long")
-        .alias("n_violations"),
-        F.col("n_rows").cast("double").alias("score"),
+    ok = F.col("n_rows") >= cfg.min_rows_per_partition
+    v = verdict(
+        ref_parts,
+        "min_rows",
+        passed=ok,
+        n_violations=F.when(ok, F.lit(0)).otherwise(F.lit(1)),
+        score=F.col("n_rows"),
     )
     return CheckOutput(verdicts=v)
 
@@ -192,42 +180,20 @@ def row_parity_check(
         .join(cand_parts.withColumnRenamed("n_rows", "n_cand"), "partition_id", "full_outer")
         .fillna(0, ["n_ref", "n_cand"])
     )
-    v = j.select(
-        F.col("partition_id").cast("int"),
-        F.lit("row_parity").alias("check_id"),
-        (F.col("n_ref") == F.col("n_cand")).alias("passed"),
-        F.abs(F.col("n_ref") - F.col("n_cand")).cast("long").alias("n_violations"),
-        (F.col("n_cand") - F.col("n_ref")).cast("double").alias("score"),
+    v = verdict(
+        j,
+        "row_parity",
+        passed=F.col("n_ref") == F.col("n_cand"),
+        n_violations=F.abs(F.col("n_ref") - F.col("n_cand")),
+        score=F.col("n_cand") - F.col("n_ref"),
     )
     return CheckOutput(verdicts=v)
 
 
 # --------------------------------------------------------------------------
-# Uniqueness of (conv_id, turn_idx) (≙ unique frame claim video.rs:159-161)
-# --------------------------------------------------------------------------
-
-
-def uniqueness_violations(cand: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:
-    """groupBy the full key. The key is fine-grained (turn-level), so the
-    shuffle is uniform by construction — Spark's partial aggregation is the
-    'salt' here; the salted path is needed only for conv-level aggs."""
-    dups = (
-        cand.groupBy("partition_id", "conv_id", "turn_idx")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") > 1)
-    )
-    return _viol(
-        dups,
-        "uniqueness",
-        cls=F.lit("invalid"),
-        observed=F.concat(F.lit("count="), F.col("n")),
-        expected=F.lit("count=1"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Monotone ordering (≙ strictly increasing frame index video.rs:159-161;
-# ordered stateful scans gaussian.rs:46-91)
+# Uniqueness of (conv_id, turn_idx) + monotone ordering (≙ unique,
+# strictly increasing frame index video.rs:159-161; ordered stateful scans
+# gaussian.rs:46-91)
 # --------------------------------------------------------------------------
 
 
@@ -237,9 +203,18 @@ def order_unique_violations(
     do_unique: bool = True,
     do_mono: bool = True,
 ) -> DataFrame:
-    """Fused uniqueness + monotone-ordering violations in ONE scan and ONE
-    (conv_id, chunk)-keyed exchange — the suite's fast path when both
-    checks are enabled.
+    """Uniqueness and/or monotone-ordering violations in ONE scan and ONE
+    (conv_id, chunk)-keyed exchange.
+
+    No whole-conversation window: Window.partitionBy(conv_id) would
+    serialize a hot conversation onto one task (the skew case: one conv
+    holding 5% of all turns). Instead two phases:
+      phase 1: windows within (conv_id, turn_idx div monotone_chunk_turns)
+               — a hot conversation fans out over n_turns/chunk tasks;
+      phase 2: adjacent pairs ACROSS chunk boundaries via a per-chunk
+               summary (first/last ts by turn order) + lag over summaries —
+               n_turns/chunk summary rows per conv, trivially small.
+    Together they see exactly the set of adjacent (prev, cur) pairs.
 
     Why fusible: after sorting by turn_idx within (conv_id, chunk),
     duplicate (conv_id, turn_idx) keys are ADJACENT (equal turn_idx can
@@ -253,16 +228,14 @@ def order_unique_violations(
         tests/test_plan_shapes.py)
     Both violation kinds are emitted from one array+explode projection, so
     the fact rows are scanned, shuffled, sorted and windowed exactly once.
-    Output rows are IDENTICAL to uniqueness_violations +
-    monotone_ts_violations' in-chunk part (pinned by the shared oracle
-    tests); the cross-chunk boundary pairs still come from the tiny
-    per-chunk summary (same as monotone_ts_violations phase 2).
+    Pinned to oracle.uniqueness_violations / oracle.monotone_violations and
+    to a naive whole-conversation scan (tests/test_properties.py).
     """
     if not (do_unique or do_mono):
         raise ValueError(
             "order_unique_violations: at least one of do_unique/do_mono must be True"
         )
-    ts = F.col(cfg.order_col)
+    ts = F.col("ts")
     chunk_rows = cfg.monotone_chunk_turns
     d = cand.select(
         "partition_id",
@@ -332,8 +305,7 @@ def order_unique_violations(
     )
     if not do_mono:
         return in_chunk
-    # cross-chunk boundary pairs over the per-chunk summary (identical to
-    # monotone_ts_violations phase 2)
+    # phase 2: cross-chunk boundary pairs over the per-chunk summary
     summ = d.groupBy("partition_id", "conv_id", "chunk").agg(
         F.min("turn_idx").alias("first_turn"),
         F.min_by("ts_", "turn_idx").alias("first_ts"),
@@ -361,86 +333,9 @@ def order_unique_violations(
     return in_chunk.unionByName(boundary_v)
 
 
-def monotone_ts_violations(cand: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:
-    """Adjacent-turn ordering check WITHOUT a whole-conversation window.
-
-    A plain Window.partitionBy(conv_id) serializes a hot conversation onto
-    one task (the north-rule skew case: one conv holding 5% of all turns).
-    Two-phase instead, ≙ salted_conv_agg's shape:
-      phase 1: lag within (conv_id, turn_idx div chunk) — a hot conv fans
-               out across n_turns/chunk tasks;
-      phase 2: adjacent pairs ACROSS chunk boundaries via a per-chunk
-               summary (first/last ts by turn order) + lag over summaries —
-               n_turns/chunk summary rows per conv, trivially small.
-    Union is exactly the set of adjacent (prev, cur) pairs, so the output
-    rows are identical to the single-window formulation."""
-    ts = F.col(cfg.order_col)
-    chunk_rows = cfg.monotone_chunk_turns
-    d = cand.select(
-        "partition_id",
-        "conv_id",
-        "turn_idx",
-        ts.alias("ts_"),
-        F.floor(F.col("turn_idx") / chunk_rows).alias("chunk"),
-    )
-    w_in = Window.partitionBy("conv_id", "chunk").orderBy("turn_idx")
-    in_chunk = d.withColumn("prev_ts", F.lag("ts_").over(w_in)).filter(
-        F.col("ts_") < F.col("prev_ts")
-    )
-    summ = d.groupBy("partition_id", "conv_id", "chunk").agg(
-        F.min("turn_idx").alias("first_turn"),
-        F.min_by("ts_", "turn_idx").alias("first_ts"),
-        F.max_by("ts_", "turn_idx").alias("last_ts"),
-    )
-    w_s = Window.partitionBy("conv_id").orderBy("chunk")
-    boundary = (
-        summ.withColumn("prev_ts", F.lag("last_ts").over(w_s))
-        .filter(F.col("first_ts") < F.col("prev_ts"))
-        .select(
-            "partition_id",
-            "conv_id",
-            F.col("first_turn").alias("turn_idx"),
-            F.col("first_ts").alias("ts_"),
-            "prev_ts",
-        )
-    )
-    bad = in_chunk.select(
-        "partition_id", "conv_id", "turn_idx", "ts_", "prev_ts"
-    ).unionByName(boundary)
-    return _viol(
-        bad,
-        "monotone_ts",
-        cls=F.lit("invalid"),
-        observed=F.col("ts_"),
-        expected=F.concat(F.lit(">= "), F.col("prev_ts")),
-    )
-
-
 # --------------------------------------------------------------------------
 # Vocabulary referential integrity (≙ enum parsers video.rs:565-655)
 # --------------------------------------------------------------------------
-
-
-def vocab_violations(
-    cand: DataFrame,
-    cfg: CheckSuiteConfig,
-    column: str,
-    vocab: tuple[str, ...],
-    nullable: bool,
-) -> DataFrame:
-    spark = cand.sparkSession
-    check_id = f"vocab_{column}"
-    dim = spark.createDataFrame([(v,) for v in vocab], [column])
-    bad = cand.join(F.broadcast(dim), column, "left_anti")
-    if nullable:
-        bad = bad.filter(F.col(column).isNotNull())
-    return _viol(
-        bad,
-        check_id,
-        cls=F.lit("invalid"),
-        observed=F.col(column),
-        expected=F.lit(f"in dim_{column}s"),
-    )
 
 
 def vocab_violations_fused(
@@ -451,14 +346,12 @@ def vocab_violations_fused(
     """All vocabulary checks in ONE scan of the fact rows.
 
     Each vocabulary is a small static set, so membership compiles to an In
-    predicate (whole-stage codegen, no join at all) — semantically identical
-    to the broadcast anti-join in vocab_violations incl. the null-key case
-    (a NULL never equi-matches a dim row, so non-nullable columns emit a
-    violation for NULL; pinned by the shared oracle tests). A row violating
-    several vocabularies emits one row per violated check via array+explode.
-    The standalone dim-table-join form remains vocab_violations (used by the
-    registry's referential-integrity query, where the dimension is a real
-    table)."""
+    predicate (whole-stage codegen, no join at all). A NULL is a violation
+    of a non-nullable column and allowed in a nullable one (pinned to
+    oracle.vocab_violations). A row violating several vocabularies emits
+    one row per violated check via array+explode. The registry's
+    referential-integrity query (registry/core.py::vocab_ref_integrity),
+    where the dimension is a real table, keeps its own anti-join."""
     kinds = []
     for column, vocab, nullable in specs:
         col = F.col(column)
@@ -541,25 +434,4 @@ def text_parity_violations(
         cls=F.col("cls"),
         observed=F.col("cand_p"),
         expected=F.col("ref_p"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Salted two-phase conversation aggregation (north-rule skew handling)
-# --------------------------------------------------------------------------
-
-
-def salted_conv_agg(df: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:
-    """Per-conversation row counts via two-phase aggregation: phase 1 groups
-    on (conv_id, salt) — a hot conversation's rows split across
-    salt_buckets reducers — phase 2 merges the partials. Output:
-    (partition_id, conv_id, n_turns, max_turn_idx)."""
-    salt = F.pmod(F.xxhash64("turn_idx", cfg.order_col), F.lit(cfg.salt_buckets))
-    phase1 = (
-        df.withColumn("salt", salt)
-        .groupBy("partition_id", "conv_id", "salt")
-        .agg(F.count("*").alias("pn"), F.max("turn_idx").alias("pm"))
-    )
-    return phase1.groupBy("partition_id", "conv_id").agg(
-        F.sum("pn").alias("n_turns"), F.max("pm").alias("max_turn_idx")
     )

@@ -56,9 +56,10 @@ _PARTIAL_SCHEMA = StructType(
 )
 
 
-def channel_expr(text_col: str, channel: str):
-    """Feature channel as a Catalyst expression (computed once per side in
-    checks.prepare and shared by the drift checks).
+def channel_expr(channel: str):
+    """Feature channel of the `text` column as a Catalyst expression
+    (computed once per side in checks.prepare and shared by the drift
+    checks).
 
     Emitted as FLOAT, not double: channel values live in ~[0,1] with a few
     significant digits, so f32's 24-bit mantissa is lossless headroom — and
@@ -68,7 +69,7 @@ def channel_expr(text_col: str, channel: str):
     memory-bandwidth-bound (ARCHITECTURE.md §7: 1.9x per-task CPU inflation
     on identical stages). All downstream MATH upcasts to f64 (the oracle
     quantizes identically, so 1e-9 score parity is preserved)."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     if channel == "len":
         e = F.least(F.length(t), F.lit(2048)).cast("double") / 2048.0
     elif channel == "tok":
@@ -321,7 +322,7 @@ def drift_score_check_arrow(
     score over the paired channel series, passing at cfg.score_threshold.
     Pinned to the pandas oracle at 1e-9
     (tests/test_engine_vs_oracle.py::test_drift_scores_match_oracle)."""
-    from .checks import CheckOutput
+    from .checks import CheckOutput, verdict
     from .drift import calibrated_score
 
     # consumes the prepare() projection (ch_<name> computed once per side).
@@ -368,15 +369,11 @@ def drift_score_check_arrow(
         )
     )
     scores = calibrated_score(metrics, cfg)
-    verdicts = (
-        parts.select("partition_id")
-        .join(scores, "partition_id", "left")
-        .select(
-            F.col("partition_id").cast("int"),
-            F.lit("drift_score").alias("check_id"),
-            F.coalesce(F.col("score") >= cfg.score_threshold, F.lit(True)).alias("passed"),
-            F.lit(0).cast("long").alias("n_violations"),
-            F.col("score").cast("double").alias("score"),
-        )
+    verdicts = verdict(
+        parts.select("partition_id").join(scores, "partition_id", "left"),
+        "drift_score",
+        passed=F.coalesce(F.col("score") >= cfg.score_threshold, F.lit(True)),
+        n_violations=F.lit(0),
+        score=F.col("score"),
     )
     return CheckOutput(verdicts=verdicts, metrics=metrics)

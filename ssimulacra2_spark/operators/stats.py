@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import CheckSuiteConfig
-from .checks import CheckOutput
+from .checks import CheckOutput, verdict
 
 
 def column_stats(cand: DataFrame, parts: DataFrame, cfg: CheckSuiteConfig) -> CheckOutput:
@@ -47,15 +47,11 @@ def column_stats(cand: DataFrame, parts: DataFrame, cfg: CheckSuiteConfig) -> Ch
     # verdict: null-rate gate on text (role/tool nullability is vocab's job).
     # Left-join the partition universe so a bucket with no cand rows still
     # gets an explicit verdict (vacuous pass: zero rows, zero null texts).
-    verdicts = (
-        parts.select("partition_id")
-        .join(agg, "partition_id", "left")
-        .select(
-            F.col("partition_id").cast("int"),
-            F.lit("column_stats").alias("check_id"),
-            F.coalesce(F.col("text_nulls") == 0, F.lit(True)).alias("passed"),
-            F.coalesce(F.col("text_nulls"), F.lit(0)).cast("long").alias("n_violations"),
-            F.col("len_mean").cast("double").alias("score"),
-        )
+    verdicts = verdict(
+        parts.select("partition_id").join(agg, "partition_id", "left"),
+        "column_stats",
+        passed=F.coalesce(F.col("text_nulls") == 0, F.lit(True)),
+        n_violations=F.coalesce(F.col("text_nulls"), F.lit(0)),
+        score=F.col("len_mean"),
     )
     return CheckOutput(verdicts=verdicts, metrics=metrics)

@@ -30,12 +30,6 @@ from .constants import (
 )
 
 
-def _with_pid(df: pd.DataFrame, partition_of: dict[str, int]) -> pd.DataFrame:
-    df = df.copy()
-    df["partition_id"] = df["conv_id"].map(partition_of).astype("int32")
-    return df
-
-
 # --------------------------------------------------------------------------
 # violation-set checks (exact)
 # --------------------------------------------------------------------------
@@ -220,12 +214,12 @@ def emb_drift_cosines(
     partition_of: dict[str, int],
 ) -> dict[int, float]:
     """Per-partition centroid cosine between the snapshot pair (numpy
-    mirror of operators/drift.emb_drift_check)."""
+    mirror of the emb_drift half of operators/drift.psi_emb_fused_check)."""
 
     def centroids(df: pd.DataFrame) -> dict[int, np.ndarray]:
         chans = [c for c in cfg.emb_channels if c in cfg.channels]
         feats = np.stack(
-            [_featurize_channel(df[cfg.text_col], ch) for ch in chans], axis=1
+            [_featurize_channel(df["text"], ch) for ch in chans], axis=1
         )
         pid = df["conv_id"].map(partition_of).to_numpy()
         return {int(p): feats[pid == p].mean(axis=0) for p in np.unique(pid)}
@@ -234,4 +228,35 @@ def emb_drift_cosines(
     out = {}
     for p in set(a) & set(b):
         out[p] = float(a[p] @ b[p] / (np.linalg.norm(a[p]) * np.linalg.norm(b[p])))
+    return out
+
+
+def psi_ks(
+    ref: pd.DataFrame,
+    cand: pd.DataFrame,
+    cfg: CheckSuiteConfig,
+    partition_of: dict[str, int],
+) -> dict[int, tuple[float, float]]:
+    """Per-partition (psi, ks) over text-length histograms (numpy mirror of
+    the psi_ks half of operators/drift.psi_emb_fused_check): fixed
+    [0, 2048) range in cfg.drift_bins bins, only bins present on either
+    side take part, shares carry eps 1e-6."""
+    eps = 1e-6
+    nb = cfg.drift_bins
+
+    def hists(df: pd.DataFrame) -> dict[int, np.ndarray]:
+        n = np.minimum(df["text"].str.len().fillna(0).to_numpy(np.float64), 2047.0)
+        b = np.minimum(nb - 1, np.floor(n / (2048 / nb))).astype(np.int64)
+        pid = df["conv_id"].map(partition_of).to_numpy()
+        return {int(p): np.bincount(b[pid == p], minlength=nb) for p in np.unique(pid)}
+
+    a, c = hists(ref), hists(cand)
+    out = {}
+    for pid in set(a) & set(c):
+        present = (a[pid] > 0) | (c[pid] > 0)
+        p = a[pid][present] / a[pid].sum() + eps
+        q = c[pid][present] / c[pid].sum() + eps
+        psi = float(np.sum((p - q) * np.log(p / q)))
+        ks = float(np.max(np.abs(np.cumsum(p) - np.cumsum(q))))
+        out[pid] = (psi, ks)
     return out

@@ -144,8 +144,8 @@ FROM events GROUP BY user_id ORDER BY partition_id
 @q("sink_graph_png")
 def sink_graph_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-frame score series that feeds the graph sink (ref: area-chart PNG
-    video.rs:509-562). The optional matplotlib renderer lives in
-    operators/report.py; the data series is what the driver can check."""
+    video.rs:509-562). The engine ships the data series, which is what the
+    driver can check; rendering it is left to the consumer."""
     ev = load(spark, sf_dir, "events")
     return (
         ev.groupBy(F.date_format("ts", "yyyy-MM-dd HH").alias("frame"))

@@ -213,7 +213,7 @@ def sessionize_gap_df(
 
     Skew-safe plan: NO whole-user window (a hot user with 10^8 events
     would serialize onto one task). Same chunk-boundary pattern as
-    checks.monotone_ts_violations, here as a two-phase prefix scan:
+    checks.order_unique_violations, here as a two-phase prefix scan:
 
       phase 1 (per (user, time-chunk)): lag within the chunk gives
         every gap except the chunk's first row; a per-chunk summary
@@ -317,7 +317,7 @@ def asof_join_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
          policy takes the carry-in — the last policy of any EARLIER
          bucket, computed once over the tiny per-bucket summary and
          broadcast back (same chunk-boundary pattern as
-         checks.monotone_ts_violations).
+         checks.order_unique_violations).
 
     Intermediate rows = events + policies, never their product; the
     only full-size exchange is the bucket shuffle. A hot bucket splits

@@ -65,7 +65,7 @@ def windowed_stats_stream(stream: DataFrame, watermark: str = "1 hour") -> DataF
 def centroid_stream(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Per-window channel centroid of the transcript stream — the
     incremental form of the emb_drift centroid build (operators/drift.
-    emb_drift_check): each tumbling window accumulates mergeable partial
+    psi_emb_fused_check): each tumbling window accumulates mergeable partial
     sums for the cheap channel pair (length, xxhash bucket), so a drift
     monitor can compare successive windows' centroids as they close.
     Watermark bounds the open-window state exactly like the batch check

@@ -21,9 +21,10 @@ def test_synth_config_round_trips(synth_cfg):
 
 
 def test_removed_key_fails_loudly():
-    # `radius` is a removed field: an old config file carrying it must
-    # fail rather than load with the key silently ignored
-    d = json.loads(CheckSuiteConfig().to_json())
-    d["radius"] = 5
-    with pytest.raises(TypeError):
-        CheckSuiteConfig.from_json(json.dumps(d))
+    # removed fields: an old config file carrying one must fail rather
+    # than load with the key silently ignored
+    for key, value in (("radius", 5), ("order_col", "ts"), ("salt_buckets", 8)):
+        d = json.loads(CheckSuiteConfig().to_json())
+        d[key] = value
+        with pytest.raises(TypeError):
+            CheckSuiteConfig.from_json(json.dumps(d))

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import math
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
@@ -105,72 +106,75 @@ def test_drift_scores_match_oracle(spark, synth_tables):
         assert math.isclose(got[pid], s, rel_tol=1e-9), (pid, got[pid], s)
 
 
+def _prepared_pair(synth_tables, cfg):
+    t = synth_tables
+    ref_p = C.prepare(t["ref"].drop("partition_id"), cfg)
+    cand_p = C.prepare(t["cand"].drop("partition_id"), cfg)
+    return ref_p, cand_p, C.partition_counts(ref_p)
+
+
 def test_emb_drift_matches_oracle(spark, synth_tables):
     """Embedding-centroid drift cosines must match the numpy oracle to
     1e-9 relative, and ref-vs-ref must pass everywhere."""
-    from ssimulacra2_spark.operators.drift import emb_drift_check
+    from ssimulacra2_spark.operators.drift import psi_emb_fused_check
 
     t = synth_tables
-    cfg = t["cfg"]
-    ref_p = C.prepare(t["ref"].drop("partition_id"), cfg)
-    cand_p = C.prepare(t["cand"].drop("partition_id"), cfg)
-    parts = C.partition_counts(ref_p)
-    out = emb_drift_check(ref_p, cand_p, parts, cfg)
+    cfg = replace(t["cfg"], checks=("emb_drift",))
+    ref_p, cand_p, parts = _prepared_pair(t, cfg)
+    out = psi_emb_fused_check(ref_p, cand_p, parts, cfg)
     got = {r.partition_id: (r.score, r.passed) for r in out.verdicts.collect()}
     want = oracle.emb_drift_cosines(t["res"].ref, t["res"].cand, cfg, t["partition_of"])
     assert set(got) == set(want)
     for pid, cos in want.items():
         assert math.isclose(got[pid][0], cos, rel_tol=1e-9), (pid, got[pid], cos)
         assert got[pid][1] == (cos >= cfg.emb_drift_min_cos)
-    clean = emb_drift_check(ref_p, ref_p, parts, cfg).verdicts.collect()
+    clean = psi_emb_fused_check(ref_p, ref_p, parts, cfg).verdicts.collect()
     assert all(r.passed for r in clean)
     # negative case: gut the text on one side -> centroids diverge and the
     # check FIRES (guards against a threshold that can never fail)
-    import pyspark.sql.functions as F2
-
-    broken = C.prepare(
-        t["cand"].drop("partition_id").withColumn("text", F2.lit("x")), cfg
-    )
-    fired = emb_drift_check(ref_p, broken, parts, cfg).verdicts.collect()
+    broken = C.prepare(t["cand"].drop("partition_id").withColumn("text", F.lit("x")), cfg)
+    fired = psi_emb_fused_check(ref_p, broken, parts, cfg).verdicts.collect()
     assert any(not r.passed for r in fired)
 
 
-def test_psi_emb_fused_matches_standalone(spark, synth_tables):
-    """The fused single-scan psi_ks+emb_drift branch must reproduce both
-    standalone checks: identical verdicts, scores equal to 1e-9 (the only
-    permitted difference is f64 partial-sum order)."""
-    from ssimulacra2_spark.operators.drift import (
-        emb_drift_check,
-        psi_emb_fused_check,
-        psi_ks_check,
-    )
+def test_psi_ks_matches_oracle(spark, synth_tables):
+    """PSI scores must match the numpy histogram oracle to 1e-9 and the
+    verdict must follow both thresholds. Synth PSI is 0 on most
+    partitions, so a gutted candidate checks that the check can fail."""
+    from ssimulacra2_spark.operators.drift import psi_emb_fused_check
 
     t = synth_tables
-    cfg = t["cfg"]
-    ref_p = C.prepare(t["ref"].drop("partition_id"), cfg)
-    cand_p = C.prepare(t["cand"].drop("partition_id"), cfg)
-    parts = C.partition_counts(ref_p)
-    fused = {
-        (r.partition_id, r.check_id): (r.score, r.passed)
-        for r in psi_emb_fused_check(ref_p, cand_p, parts, cfg).verdicts.collect()
-    }
-    sa = {
-        (r.partition_id, r.check_id): (r.score, r.passed)
-        for out in (
-            psi_ks_check(ref_p, cand_p, parts, cfg),
-            emb_drift_check(ref_p, cand_p, parts, cfg),
-        )
-        for r in out.verdicts.collect()
-    }
-    assert set(fused) == set(sa)
-    for k, (score, passed) in sa.items():
-        assert fused[k][1] == passed, k
-        if score is None:
-            assert fused[k][0] is None, k
-        else:
-            assert math.isclose(fused[k][0], score, rel_tol=1e-9, abs_tol=1e-12), (
-                k, fused[k][0], score,
-            )
+    cfg = replace(t["cfg"], checks=("psi_ks",))
+    ref_p, cand_p, parts = _prepared_pair(t, cfg)
+    out = psi_emb_fused_check(ref_p, cand_p, parts, cfg)
+    got = {r.partition_id: (r.score, r.passed) for r in out.verdicts.collect()}
+    want = oracle.psi_ks(t["res"].ref, t["res"].cand, cfg, t["partition_of"])
+    assert set(got) == set(want)
+    for pid, (psi, ks) in want.items():
+        assert math.isclose(got[pid][0], psi, rel_tol=1e-9, abs_tol=1e-12), (pid, got[pid], psi)
+        assert got[pid][1] == (psi <= cfg.psi_threshold and ks <= cfg.ks_threshold)
+    # negative case: every candidate text collapses into bin 0
+    broken = C.prepare(t["cand"].drop("partition_id").withColumn("text", F.lit("x")), cfg)
+    fired = psi_emb_fused_check(ref_p, broken, parts, cfg).verdicts.collect()
+    assert fired and not any(r.passed for r in fired)
+
+
+def test_drift_check_selection(spark, synth_tables):
+    """The suite emits verdicts for exactly the enabled drift checks, and
+    emb_drift's rows do not depend on whether psi_ks runs beside it (the
+    default config runs emb_drift alone)."""
+    t = synth_tables
+    ref = t["ref"].drop("partition_id")
+    cand = t["cand"].drop("partition_id")
+    emb_rows = []
+    for checks in (("psi_ks",), ("emb_drift",), ("psi_ks", "emb_drift")):
+        cfg = replace(t["cfg"], checks=checks)
+        verdicts, _ = ValidationSuite(cfg).run(spark, ref, cand)
+        rows = verdicts.collect()
+        assert {r.check_id for r in rows} == set(checks)
+        if "emb_drift" in checks:
+            emb_rows.append(sorted(tuple(r) for r in rows if r.check_id == "emb_drift"))
+    assert emb_rows[0] and emb_rows[0] == emb_rows[1]
 
 
 def test_drifted_partitions_score_lower(spark, synth_tables):

@@ -41,7 +41,7 @@ def test_chunked_monotone_equals_naive(spark):
 
     from ssimulacra2_spark.config import CheckSuiteConfig
     from ssimulacra2_spark.operators.checks import (
-        monotone_ts_violations,
+        order_unique_violations,
         with_partition_id,
     )
 
@@ -60,7 +60,7 @@ def test_chunked_monotone_equals_naive(spark):
     df = with_partition_id(spark.createDataFrame(pdf), cfg)
     got = {
         (r.conv_id, r.turn_idx)
-        for r in monotone_ts_violations(df, cfg).collect()
+        for r in order_unique_violations(df, cfg, do_unique=False).collect()
     }
     assert got == _naive_monotone(pdf)
 
