@@ -150,10 +150,9 @@ def main() -> None:
         materialize(verdicts)
 
     # one untimed steady-state warmup (JIT, python workers, pre-faulted
-    # working set — see tools/vm_pagefault_ceiling.py for why faults on
-    # this VM make cold multi-thread timings meaningless). Drop the
-    # warmup's persisted blocks OUTSIDE the timed window (matches
-    # jobs/suite_bench.py's one_pass) so the timed pass neither runs
+    # working set: on a VM with serialized first-touch page faults, cold
+    # multi-thread timings are meaningless). Drop the warmup's persisted
+    # blocks OUTSIDE the timed window so the timed pass neither runs
     # under stale cache residency nor pays the unpersist cost.
     suite_pass()
     spark.catalog.clearCache()

@@ -129,8 +129,7 @@ def stage_pair(
     # MEASURED at 80M/32c and LOST — 117-179 s suite wall vs a stable
     # 100-104 s for this layout (2 interleaved reps each): more, smaller
     # single-row-group files multiply per-task file-open + first-touch
-    # fault events, which this VM serializes (see
-    # tools/vm_pagefault_ceiling.py), and the wave-tail saving never
+    # fault events, which that VM serialized, and the wave-tail saving never
     # materializes. At warehouse scale file size is the equivalent knob
     # and is owned by the writer's target-file-size, not the core count.
     # split threshold: a conversation above n_turns/(4*par) rows would make

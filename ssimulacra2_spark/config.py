@@ -6,7 +6,7 @@ governs interpretation of the raw table — vocabularies, guards, scale
 count, thresholds — in one serializable object. The transcript schema
 itself is fixed: TRANSCRIPT_COLUMNS below is the one statement of the data
 model, and every check reads those column names. All scale knobs
-(buckets, chunk sizes, sketch precision) are config-driven so the same
+(buckets, chunk sizes, histogram bins) are config-driven so the same
 code path runs at sf0.001 and at 10^12 rows (SURVEY §7.2).
 """
 
@@ -43,6 +43,12 @@ DEFAULT_TOOLS = (
 
 TRANSCRIPT_COLUMNS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
+# every check id the suite runs, in verdict order
+ALL_CHECKS = (
+    "schema", "min_rows", "row_parity", "uniqueness", "monotone_ts", "vocab_role",
+    "vocab_tool", "text_parity", "column_stats", "psi_ks", "emb_drift", "drift_score",
+)
+
 
 @dataclass
 class CheckSuiteConfig:
@@ -69,14 +75,14 @@ class CheckSuiteConfig:
     psi_threshold: float = 0.25
     ks_threshold: float = 0.2
     drift_bins: int = 20
-    # embedding-centroid drift (drift.psi_emb_fused_check): minimum cosine
+    # embedding-centroid drift (operators/stats.rollup): minimum cosine
     # between the per-partition channel-vector centroids of the two sides
     emb_drift_min_cos: float = 0.995
     # channels forming the per-turn vector for emb_drift. Default is the
     # CHEAP pair: 'len' (length) and 'hash' (xxhash) — deliberately NOT
     # 'tok', whose regex is the expensive featurization (measured
     # ~1.9s/8M-rows/eval); referencing only cheap channels lets Catalyst
-    # prune the tok regex out of the fused psi+emb branch entirely
+    # prune the tok regex out of the profile aggregate entirely
     # (interleaved A/B: fused-with-tok cost ~+2-4s at 8M/32c, cheap pair
     # ~+0). Must be a subset of `channels`.
     emb_channels: tuple[str, ...] = ("len", "hash")
@@ -86,10 +92,6 @@ class CheckSuiteConfig:
     # spreads over n_turns/chunk tasks; chunk-boundary pairs are checked
     # over a tiny per-chunk summary (see checks.order_unique_violations)
     monotone_chunk_turns: int = 8192
-
-    # sketch knobs (100 TB path)
-    hll_rsd: float = 0.02
-    percentile_accuracy: int = 10_000
 
     # drift kernel fanout WITHIN a verdict bucket: the applyInPandas group key
     # is (partition_id, pmod(hash(conv_id), drift_subbuckets)) so one pandas
@@ -117,19 +119,7 @@ class CheckSuiteConfig:
     # 1 = single commit at end of run (cheapest; no mid-run durability).
     commit_batches: int = 4
 
-    checks: tuple[str, ...] = (
-        "schema",
-        "min_rows",
-        "row_parity",
-        "uniqueness",
-        "monotone_ts",
-        "vocab_role",
-        "vocab_tool",
-        "text_parity",
-        "column_stats",
-        "emb_drift",
-        "drift_score",
-    )
+    checks: tuple[str, ...] = tuple(c for c in ALL_CHECKS if c != "psi_ks")
 
     def to_json(self) -> str:
         return json.dumps(asdict(self), indent=2)

@@ -131,7 +131,6 @@ def verdict(
 @dataclass
 class CheckOutput:
     verdicts: DataFrame
-    metrics: DataFrame | None = None
 
 
 # --------------------------------------------------------------------------
@@ -153,41 +152,6 @@ def schema_check(spark, ref: DataFrame, cand: DataFrame, cfg: CheckSuiteConfig) 
         [(-1, "schema", passed, len(problems), None)], schema=VERDICT_SCHEMA
     )
     return CheckOutput(verdicts=verdicts)
-
-
-# --------------------------------------------------------------------------
-# Volume guards (≙ InvalidImageSize lib.rs:53-55; dim parity lib.rs:49-51)
-# --------------------------------------------------------------------------
-
-
-def min_rows_check(ref_parts: DataFrame, cfg: CheckSuiteConfig) -> CheckOutput:
-    ok = F.col("n_rows") >= cfg.min_rows_per_partition
-    v = verdict(
-        ref_parts,
-        "min_rows",
-        passed=ok,
-        n_violations=F.when(ok, F.lit(0)).otherwise(F.lit(1)),
-        score=F.col("n_rows"),
-    )
-    return CheckOutput(verdicts=v)
-
-
-def row_parity_check(
-    ref_parts: DataFrame, cand_parts: DataFrame, cfg: CheckSuiteConfig
-) -> CheckOutput:
-    j = (
-        ref_parts.withColumnRenamed("n_rows", "n_ref")
-        .join(cand_parts.withColumnRenamed("n_rows", "n_cand"), "partition_id", "full_outer")
-        .fillna(0, ["n_ref", "n_cand"])
-    )
-    v = verdict(
-        j,
-        "row_parity",
-        passed=F.col("n_ref") == F.col("n_cand"),
-        n_violations=F.abs(F.col("n_ref") - F.col("n_cand")),
-        score=F.col("n_cand") - F.col("n_ref"),
-    )
-    return CheckOutput(verdicts=v)
 
 
 # --------------------------------------------------------------------------

@@ -42,6 +42,7 @@ from pyspark.sql.types import (
 
 from ..config import CheckSuiteConfig
 from ..constants import C2, KERNEL_TAPS
+from .checks import CheckOutput, verdict
 
 _PARTIAL_SCHEMA = StructType(
     [
@@ -315,14 +316,11 @@ def _with_chunks(paired: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:
     )
 
 
-def drift_score_check_arrow(
-    ref: DataFrame, cand: DataFrame, parts: DataFrame, cfg: CheckSuiteConfig
-):
-    """drift_score verdicts: per-partition calibrated SSIMULACRA2-style
-    score over the paired channel series, passing at cfg.score_threshold.
-    Pinned to the pandas oracle at 1e-9
+def drift_scores(ref: DataFrame, cand: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:
+    """(partition_id, score): the per-partition calibrated
+    SSIMULACRA2-style score over the paired channel series, for every
+    partition with paired rows. Pinned to the pandas oracle at 1e-9
     (tests/test_engine_vs_oracle.py::test_drift_scores_match_oracle)."""
-    from .checks import CheckOutput, verdict
     from .drift import calibrated_score
 
     # consumes the prepare() projection (ch_<name> computed once per side).
@@ -368,12 +366,24 @@ def drift_score_check_arrow(
             "stack(2, 'l1', l1_, 'l4', l4_) AS (norm, value)",
         )
     )
-    scores = calibrated_score(metrics, cfg)
-    verdicts = verdict(
-        parts.select("partition_id").join(scores, "partition_id", "left"),
+    return calibrated_score(metrics, cfg)
+
+
+def drift_verdicts(scores: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:
+    """drift_score verdicts over (partition_id, score) rows, passing at
+    cfg.score_threshold; a NULL score (no paired rows) passes."""
+    return verdict(
+        scores,
         "drift_score",
         passed=F.coalesce(F.col("score") >= cfg.score_threshold, F.lit(True)),
         n_violations=F.lit(0),
         score=F.col("score"),
     )
-    return CheckOutput(verdicts=verdicts, metrics=metrics)
+
+
+def drift_score_check_arrow(
+    ref: DataFrame, cand: DataFrame, parts: DataFrame, cfg: CheckSuiteConfig
+):
+    """drift_score verdicts for the partitions of `parts`, standalone."""
+    scores = parts.select("partition_id").join(drift_scores(ref, cand, cfg), "partition_id", "left")
+    return CheckOutput(verdicts=drift_verdicts(scores, cfg))

@@ -213,8 +213,9 @@ def emb_drift_cosines(
     cfg: CheckSuiteConfig,
     partition_of: dict[str, int],
 ) -> dict[int, float]:
-    """Per-partition centroid cosine between the snapshot pair (numpy
-    mirror of the emb_drift half of operators/drift.psi_emb_fused_check)."""
+    """Per-partition centroid cosine between the snapshot pair, for the
+    partitions with rows on both sides (numpy mirror of the centroids in
+    operators/stats.rollup)."""
 
     def centroids(df: pd.DataFrame) -> dict[int, np.ndarray]:
         chans = [c for c in cfg.emb_channels if c in cfg.channels]
@@ -237,10 +238,10 @@ def psi_ks(
     cfg: CheckSuiteConfig,
     partition_of: dict[str, int],
 ) -> dict[int, tuple[float, float]]:
-    """Per-partition (psi, ks) over text-length histograms (numpy mirror of
-    the psi_ks half of operators/drift.psi_emb_fused_check): fixed
-    [0, 2048) range in cfg.drift_bins bins, only bins present on either
-    side take part, shares carry eps 1e-6."""
+    """Per-partition (psi, ks) over text-length histograms, for the
+    partitions with rows on both sides (numpy mirror of the psi and ks in
+    operators/stats.rollup): fixed [0, 2048) range in cfg.drift_bins bins,
+    only bins present on either side take part, shares carry eps 1e-6."""
     eps = 1e-6
     nb = cfg.drift_bins
 
@@ -259,4 +260,38 @@ def psi_ks(
         psi = float(np.sum((p - q) * np.log(p / q)))
         ks = float(np.max(np.abs(np.cumsum(p) - np.cumsum(q))))
         out[pid] = (psi, ks)
+    return out
+
+
+def profile_verdicts(
+    ref: pd.DataFrame,
+    cand: pd.DataFrame,
+    cfg: CheckSuiteConfig,
+    partition_of: dict[str, int],
+) -> dict[tuple[int, str], tuple[bool, int, float | None]]:
+    """(partition_id, check_id) -> (passed, n_violations, score) for
+    min_rows, row_parity, column_stats, psi_ks and emb_drift over every
+    partition with rows on either side. A one-sided partition fails
+    psi_ks and emb_drift with a NULL score."""
+    n_ref = ref["conv_id"].map(partition_of).value_counts()
+    cpid = cand["conv_id"].map(partition_of)
+    n_cand = cpid.value_counts()
+    lens = cand["text"].str.len()
+    psi = psi_ks(ref, cand, cfg, partition_of)
+    cos = emb_drift_cosines(ref, cand, cfg, partition_of)
+    out = {}
+    for pid in sorted(set(n_ref.index) | set(n_cand.index)):
+        r, c = int(n_ref.get(pid, 0)), int(n_cand.get(pid, 0))
+        nulls = int(lens[cpid == pid].isna().sum())
+        mean = lens[cpid == pid].mean()
+        enough = r >= cfg.min_rows_per_partition
+        out[(pid, "min_rows")] = (enough, int(not enough), float(r))
+        out[(pid, "row_parity")] = (r == c, abs(r - c), float(c - r))
+        out[(pid, "column_stats")] = (nulls == 0, nulls, None if pd.isna(mean) else float(mean))
+        p, k = psi.get(pid, (None, None))
+        out[(pid, "psi_ks")] = (
+            p is not None and p <= cfg.psi_threshold and k <= cfg.ks_threshold, 0, p
+        )
+        cs = cos.get(pid)
+        out[(pid, "emb_drift")] = (cs is not None and cs >= cfg.emb_drift_min_cos, 0, cs)
     return out

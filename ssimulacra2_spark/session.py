@@ -112,7 +112,7 @@ def get_spark(
         # -Xms=-Xmx + pre-touch: the heap faults in once at JVM boot. This
         # sandbox VM services first-touch page faults through an
         # intermittently serialized hypervisor path (~1-2 GB/s, no parallel
-        # speedup — tools/vm_pagefault_ceiling.py); lazy heap growth under
+        # speedup, measured on the 32-core VM); lazy heap growth under
         # 32 running threads becomes a kernel fault convoy that burned
         # 70-88% of ALL cpus in sys time before this flag.
         .config(

@@ -64,8 +64,8 @@ def windowed_stats_stream(stream: DataFrame, watermark: str = "1 hour") -> DataF
 
 def centroid_stream(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Per-window channel centroid of the transcript stream — the
-    incremental form of the emb_drift centroid build (operators/drift.
-    psi_emb_fused_check): each tumbling window accumulates mergeable partial
+    incremental form of the emb_drift centroid build (operators/stats.
+    rollup): each tumbling window accumulates mergeable partial
     sums for the cheap channel pair (length, xxhash bucket), so a drift
     monitor can compare successive windows' centroids as they close.
     Watermark bounds the open-window state exactly like the batch check

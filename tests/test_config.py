@@ -23,7 +23,13 @@ def test_synth_config_round_trips(synth_cfg):
 def test_removed_key_fails_loudly():
     # removed fields: an old config file carrying one must fail rather
     # than load with the key silently ignored
-    for key, value in (("radius", 5), ("order_col", "ts"), ("salt_buckets", 8)):
+    for key, value in (
+        ("radius", 5),
+        ("order_col", "ts"),
+        ("salt_buckets", 8),
+        ("hll_rsd", 0.02),
+        ("percentile_accuracy", 10_000),
+    ):
         d = json.loads(CheckSuiteConfig().to_json())
         d[key] = value
         with pytest.raises(TypeError):

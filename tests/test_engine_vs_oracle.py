@@ -10,8 +10,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from ssimulacra2_spark import oracle
+from ssimulacra2_spark.config import ALL_CHECKS
 from ssimulacra2_spark.operators import checks as C
+from ssimulacra2_spark.operators.stats import profile_verdicts, rollup
 from ssimulacra2_spark.plans.suite import ValidationSuite
+
+PROFILE_CHECKS = ("min_rows", "row_parity", "column_stats", "psi_ks", "emb_drift")
 
 
 def _viol_keys(violations, check_id):
@@ -75,31 +79,96 @@ def test_text_parity_matches_oracle(suite_out, synth_tables):
             assert want.get(k) == "mismatch", k
 
 
-def test_row_parity_counts(suite_out, synth_tables):
-    verdicts, _ = suite_out
-    res = synth_tables["res"]
-    pof = synth_tables["partition_of"]
-    ref_counts = res.ref.assign(pid=res.ref.conv_id.map(pof)).groupby("pid").size()
-    cand_counts = res.cand.assign(pid=res.cand.conv_id.map(pof)).groupby("pid").size()
-    rows = verdicts.filter(F.col("check_id") == "row_parity").collect()
-    for r in rows:
-        want = abs(int(ref_counts.get(r.partition_id, 0)) - int(cand_counts.get(r.partition_id, 0)))
-        assert r.n_violations == want
-        assert r.passed == (want == 0)
+@pytest.fixture(scope="module")
+def one_sided(spark, synth_cfg, tmp_path_factory):
+    """A pair with ref-only and cand-only partitions: 60 conversations in
+    64 buckets, the first 25 dropped from ref and the last 25 from cand.
+    Returns the suite's verdicts with all 12 checks on, the pandas pair
+    and the conv -> partition map of both sides."""
+    from ssimulacra2_spark.synth import synth_pair
+
+    res = synth_pair(n_convs=60, seed=42)
+    convs = sorted(res.ref.conv_id.unique())
+    ref = res.ref[~res.ref.conv_id.isin(convs[:25])]
+    cand = res.cand[~res.cand.conv_id.isin(convs[-25:])]
+    d = tmp_path_factory.mktemp("one_sided")
+    ref.to_parquet(d / "ref.parquet", index=False)
+    cand.to_parquet(d / "cand.parquet", index=False)
+    cfg = replace(synth_cfg, n_buckets=64, checks=ALL_CHECKS)
+    ref_s = spark.read.parquet(str(d / "ref.parquet"))
+    cand_s = spark.read.parquet(str(d / "cand.parquet"))
+    partition_of = {
+        r.conv_id: r.partition_id
+        for r in C.with_partition_id(ref_s.unionByName(cand_s), cfg)
+        .select("conv_id", "partition_id").distinct().collect()
+    }
+    verdicts, _ = ValidationSuite(cfg).run(spark, ref_s, cand_s)
+    return {"cfg": cfg, "ref": ref, "cand": cand, "partition_of": partition_of,
+            "rows": verdicts.collect()}
+
+
+def test_one_sided_partitions(one_sided):
+    """A partition with rows on one side only gets a row for every check:
+    psi_ks and emb_drift fail with a NULL score, min_rows fails a
+    cand-only partition, column_stats passes a ref-only one vacuously."""
+    t, pof = one_sided, one_sided["partition_of"]
+    ref_p = {pof[c] for c in t["ref"].conv_id}
+    cand_p = {pof[c] for c in t["cand"].conv_id}
+    ref_only, cand_only = ref_p - cand_p, cand_p - ref_p
+    assert ref_only and cand_only
+    got = {(r.partition_id, r.check_id): (r.passed, r.n_violations, r.score) for r in t["rows"]}
+    assert {k for k in got if k[0] >= 0} == {
+        (p, c) for p in ref_p | cand_p for c in ALL_CHECKS if c != "schema"
+    }
+    for p in ref_only | cand_only:
+        assert got[(p, "psi_ks")] == (False, 0, None), p
+        assert got[(p, "emb_drift")] == (False, 0, None), p
+    for p in cand_only:
+        assert got[(p, "min_rows")] == (False, 1, 0.0), p
+    for p in ref_only:
+        assert got[(p, "column_stats")] == (True, 0, None), p
+
+
+@pytest.mark.parametrize("pair", ["synth", "one_sided"])
+def test_profile_checks_match_oracle(spark, synth_tables, one_sided, pair):
+    """min_rows, row_parity, column_stats, psi_ks and emb_drift over the
+    whole verdict universe equal oracle.profile_verdicts (scores at
+    1e-9)."""
+    if pair == "synth":
+        t = synth_tables
+        cfg = replace(t["cfg"], checks=PROFILE_CHECKS)
+        verdicts, _ = ValidationSuite(cfg).run(
+            spark, t["ref"].drop("partition_id"), t["cand"].drop("partition_id")
+        )
+        rows, ref, cand, pof = verdicts.collect(), t["res"].ref, t["res"].cand, t["partition_of"]
+    else:
+        t = one_sided
+        cfg, rows, ref, cand, pof = t["cfg"], t["rows"], t["ref"], t["cand"], t["partition_of"]
+    got = {
+        (r.partition_id, r.check_id): (r.passed, r.n_violations, r.score)
+        for r in rows
+        if r.check_id in PROFILE_CHECKS
+    }
+    want = oracle.profile_verdicts(ref, cand, cfg, pof)
+    assert set(got) == set(want)
+    for k, (passed, n, score) in want.items():
+        assert got[k][:2] == (passed, n), (k, got[k], want[k])
+        if score is None:
+            assert got[k][2] is None, (k, got[k])
+        else:
+            assert math.isclose(got[k][2], score, rel_tol=1e-9, abs_tol=1e-12), (k, got[k], score)
 
 
 def test_drift_scores_match_oracle(spark, synth_tables):
     """The Arrow drift kernel must match the pandas oracle to 1e-9
     relative."""
-    from ssimulacra2_spark.operators.drift_arrow import drift_score_check_arrow
+    from ssimulacra2_spark.operators.drift_arrow import drift_scores
 
     t = synth_tables
     cfg = t["cfg"]
     ref_p = C.prepare(t["ref"].drop("partition_id"), cfg)
     cand_p = C.prepare(t["cand"].drop("partition_id"), cfg)
-    parts = C.partition_counts(ref_p)
-    out = drift_score_check_arrow(ref_p, cand_p, parts, cfg)
-    got = {r.partition_id: r.score for r in out.verdicts.collect()}
+    got = {r.partition_id: r.score for r in drift_scores(ref_p, cand_p, cfg).collect()}
     want = oracle.drift_scores(t["res"].ref, t["res"].cand, cfg, t["partition_of"])
     assert set(got) == set(want)
     for pid, s in want.items():
@@ -109,31 +178,32 @@ def test_drift_scores_match_oracle(spark, synth_tables):
 def _prepared_pair(synth_tables, cfg):
     t = synth_tables
     ref_p = C.prepare(t["ref"].drop("partition_id"), cfg)
-    cand_p = C.prepare(t["cand"].drop("partition_id"), cfg)
-    return ref_p, cand_p, C.partition_counts(ref_p)
+    return ref_p, C.prepare(t["cand"].drop("partition_id"), cfg)
+
+
+def _profile_rows(ref_p, cand_p, cfg):
+    """The cfg.checks verdicts read off the profile rollup."""
+    return profile_verdicts(rollup(ref_p, cand_p, cfg), cfg.checks, cfg).collect()
 
 
 def test_emb_drift_matches_oracle(spark, synth_tables):
     """Embedding-centroid drift cosines must match the numpy oracle to
     1e-9 relative, and ref-vs-ref must pass everywhere."""
-    from ssimulacra2_spark.operators.drift import psi_emb_fused_check
-
     t = synth_tables
     cfg = replace(t["cfg"], checks=("emb_drift",))
-    ref_p, cand_p, parts = _prepared_pair(t, cfg)
-    out = psi_emb_fused_check(ref_p, cand_p, parts, cfg)
-    got = {r.partition_id: (r.score, r.passed) for r in out.verdicts.collect()}
+    ref_p, cand_p = _prepared_pair(t, cfg)
+    got = {r.partition_id: (r.score, r.passed) for r in _profile_rows(ref_p, cand_p, cfg)}
     want = oracle.emb_drift_cosines(t["res"].ref, t["res"].cand, cfg, t["partition_of"])
     assert set(got) == set(want)
     for pid, cos in want.items():
         assert math.isclose(got[pid][0], cos, rel_tol=1e-9), (pid, got[pid], cos)
         assert got[pid][1] == (cos >= cfg.emb_drift_min_cos)
-    clean = psi_emb_fused_check(ref_p, ref_p, parts, cfg).verdicts.collect()
+    clean = _profile_rows(ref_p, ref_p, cfg)
     assert all(r.passed for r in clean)
     # negative case: gut the text on one side -> centroids diverge and the
     # check FIRES (guards against a threshold that can never fail)
     broken = C.prepare(t["cand"].drop("partition_id").withColumn("text", F.lit("x")), cfg)
-    fired = psi_emb_fused_check(ref_p, broken, parts, cfg).verdicts.collect()
+    fired = _profile_rows(ref_p, broken, cfg)
     assert any(not r.passed for r in fired)
 
 
@@ -141,13 +211,10 @@ def test_psi_ks_matches_oracle(spark, synth_tables):
     """PSI scores must match the numpy histogram oracle to 1e-9 and the
     verdict must follow both thresholds. Synth PSI is 0 on most
     partitions, so a gutted candidate checks that the check can fail."""
-    from ssimulacra2_spark.operators.drift import psi_emb_fused_check
-
     t = synth_tables
     cfg = replace(t["cfg"], checks=("psi_ks",))
-    ref_p, cand_p, parts = _prepared_pair(t, cfg)
-    out = psi_emb_fused_check(ref_p, cand_p, parts, cfg)
-    got = {r.partition_id: (r.score, r.passed) for r in out.verdicts.collect()}
+    ref_p, cand_p = _prepared_pair(t, cfg)
+    got = {r.partition_id: (r.score, r.passed) for r in _profile_rows(ref_p, cand_p, cfg)}
     want = oracle.psi_ks(t["res"].ref, t["res"].cand, cfg, t["partition_of"])
     assert set(got) == set(want)
     for pid, (psi, ks) in want.items():
@@ -155,7 +222,7 @@ def test_psi_ks_matches_oracle(spark, synth_tables):
         assert got[pid][1] == (psi <= cfg.psi_threshold and ks <= cfg.ks_threshold)
     # negative case: every candidate text collapses into bin 0
     broken = C.prepare(t["cand"].drop("partition_id").withColumn("text", F.lit("x")), cfg)
-    fired = psi_emb_fused_check(ref_p, broken, parts, cfg).verdicts.collect()
+    fired = _profile_rows(ref_p, broken, cfg)
     assert fired and not any(r.passed for r in fired)
 
 

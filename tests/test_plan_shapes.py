@@ -99,8 +99,8 @@ def test_drift_chunking_is_plan_not_row_split(spark):
     import pyspark.sql.functions as F
 
     from ssimulacra2_spark.config import CheckSuiteConfig
-    from ssimulacra2_spark.operators.checks import partition_counts, prepare
-    from ssimulacra2_spark.operators.drift_arrow import drift_score_check_arrow
+    from ssimulacra2_spark.operators.checks import prepare
+    from ssimulacra2_spark.operators.drift_arrow import drift_scores
 
     df = spark.range(20000).select(
         (F.col("id") % 50).cast("string").alias("conv_id"),
@@ -118,12 +118,34 @@ def test_drift_chunking_is_plan_not_row_split(spark):
     for chunk in (0, 256):
         cfg = replace(base, drift_chunk_turns=chunk)
         ref, cand = prepare(df, cfg), prepare(df, cfg)
-        out = drift_score_check_arrow(
-            ref, cand, partition_counts(ref).select("partition_id"), cfg
-        )
-        p = _plan(out.verdicts)
+        p = _plan(drift_scores(ref, cand, cfg))
         assert p.count("FlatMapGroupsInPandas") == 1, chunk
         assert ("explode(" in p) == bool(chunk), chunk  # the halo duplication
+
+
+@pytest.mark.parametrize("n_checks", [12, 8])
+def test_suite_verdicts_read_one_profile_per_side(spark, synth_tables, n_checks):
+    """Every per-partition verdict comes from ONE profile aggregate per
+    side, rolled up once: a second reference to the rollup re-scans and
+    re-aggregates both sides (each reference is pruned to different
+    columns, so no exchange is reused). The only cached relation the
+    verdicts read is the persisted violations."""
+    import re
+    from dataclasses import replace
+
+    from ssimulacra2_spark.config import ALL_CHECKS
+    from ssimulacra2_spark.plans.suite import ValidationSuite
+
+    t = synth_tables
+    cfg = replace(t["cfg"], checks=ALL_CHECKS[:n_checks])
+    verdicts, _ = ValidationSuite(cfg).run(
+        spark, t["ref"].drop("partition_id"), t["cand"].drop("partition_id")
+    )
+    p = verdicts._jdf.queryExecution().optimizedPlan().toString()
+    for side in ("ref", "cand"):
+        assert len(re.findall(rf"count\(1\) AS n_{side}#", p)) == 1, side  # the profile
+        assert len(re.findall(rf"sum\(n_{side}#\d+L?\) AS n_{side}#", p)) == 1, side  # the rollup
+    assert p.count("InMemoryRelation") == 1
 
 
 def _window_specs(plan: str) -> list[tuple[tuple[str, ...], tuple[str, ...]]]:

@@ -73,8 +73,8 @@ def test_chunked_monotone_equals_naive(spark):
 def test_drift_subbuckets_exact(spark, synth_tables):
     from dataclasses import replace
 
-    from ssimulacra2_spark.operators.checks import partition_counts, prepare
-    from ssimulacra2_spark.operators.drift_arrow import drift_score_check_arrow
+    from ssimulacra2_spark.operators.checks import prepare
+    from ssimulacra2_spark.operators.drift_arrow import drift_scores
 
     t = synth_tables
     base = t["cfg"]
@@ -83,10 +83,8 @@ def test_drift_subbuckets_exact(spark, synth_tables):
         cfg = replace(base, drift_subbuckets=sub)
         ref = prepare(t["ref"].drop("partition_id"), cfg)
         cand = prepare(t["cand"].drop("partition_id"), cfg)
-        parts = partition_counts(ref).select("partition_id")
-        out = drift_score_check_arrow(ref, cand, parts, cfg)
         scores.append(
-            {r.partition_id: r.score for r in out.verdicts.collect()}
+            {r.partition_id: r.score for r in drift_scores(ref, cand, cfg).collect()}
         )
     assert scores[0].keys() == scores[1].keys()
     for pid in scores[0]:
@@ -111,8 +109,8 @@ def test_drift_chunked_matches_unchunked(spark):
     from dataclasses import replace
 
     from ssimulacra2_spark.config import CheckSuiteConfig
-    from ssimulacra2_spark.operators.checks import partition_counts, prepare
-    from ssimulacra2_spark.operators.drift_arrow import drift_score_check_arrow, halo_turns
+    from ssimulacra2_spark.operators.checks import prepare
+    from ssimulacra2_spark.operators.drift_arrow import drift_scores, halo_turns
 
     rng = np.random.default_rng(17)
     rows_r, rows_c = [], []
@@ -136,14 +134,12 @@ def test_drift_chunked_matches_unchunked(spark):
     assert 256 >= 2 * halo_turns(cfg0)  # the test chunk size is legal
     ref = prepare(spark.createDataFrame(pd.DataFrame(rows_r, columns=cols)), cfg0)
     cand = prepare(spark.createDataFrame(pd.DataFrame(rows_c, columns=cols)), cfg0)
-    parts = partition_counts(ref).select("partition_id")
     scores = []
     # two paths over identical input: the plain whole-group kernel and
     # all-rows chunking (~4-10 chunk boundaries per conversation)
     for chunk in (0, 256):
         cfg = replace(cfg0, drift_chunk_turns=chunk)
-        out = drift_score_check_arrow(ref, cand, parts, cfg)
-        scores.append({r.partition_id: r.score for r in out.verdicts.collect()})
+        scores.append({r.partition_id: r.score for r in drift_scores(ref, cand, cfg).collect()})
     for other in scores[1:]:
         assert scores[0].keys() == other.keys()
         for pid, a in scores[0].items():
