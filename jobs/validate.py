@@ -1,10 +1,11 @@
 """Production entry point: spark-submit --py-files engine.zip jobs/validate.py
 
 Validates a candidate snapshot against a reference snapshot, writes
-verdicts + violations to a checkpointed results table (resume-safe), and
-prints a per-check summary.
+verdicts + violations to a checkpointed results table as one commit
+(resume-safe: a re-run with the same --run-id skips committed partitions),
+and prints a per-check summary.
 
-    spark-submit --master local[32] --py-files engine.zip jobs/validate.py \
+    spark-submit --master local[4] --py-files engine.zip jobs/validate.py \
         --ref /data/transcripts_ref --cand /data/transcripts_cand \
         --results /data/results --run-id nightly-2025-06-01 [--config cfg.json]
 """
@@ -13,20 +14,20 @@ from __future__ import annotations
 
 import argparse
 import json
+import sys
 
 from pyspark.sql import SparkSession
 
 
-def main() -> None:
+def run(spark: SparkSession, argv: list[str]) -> list[str]:
+    """Runs the job on `spark`; returns one CHECK_SUMMARY line per check."""
     p = argparse.ArgumentParser()
     p.add_argument("--ref", required=True)
     p.add_argument("--cand", required=True)
     p.add_argument("--results", required=True)
     p.add_argument("--run-id", default="run0")
     p.add_argument("--config", default=None, help="CheckSuiteConfig JSON path")
-    args = p.parse_args()
-
-    spark = SparkSession.builder.getOrCreate()
+    args = p.parse_args(argv)
 
     from ssimulacra2_spark.config import CheckSuiteConfig
     from ssimulacra2_spark.plans.suite import ValidationSuite, summarize
@@ -41,13 +42,22 @@ def main() -> None:
     io = ParquetTableIO(args.results)
     ref = io.read_snapshot(spark, args.ref)
     cand = io.read_snapshot(spark, args.cand)
-    suite = ValidationSuite(cfg)
-    suite.run(spark, ref, cand, io=io, run_id=args.run_id)
+    ValidationSuite(cfg).run(spark, ref, cand, io=io, run_id=args.run_id)
 
     verdicts = io.read_verdicts(spark, args.run_id)
-    for row in summarize(verdicts).collect():
-        print("CHECK_SUMMARY " + json.dumps(row.asDict(), default=str))
-    spark.stop()
+    return [
+        "CHECK_SUMMARY " + json.dumps(row.asDict(), default=str)
+        for row in summarize(verdicts).collect()
+    ]
+
+
+def main() -> None:
+    spark = SparkSession.builder.getOrCreate()
+    try:
+        for line in run(spark, sys.argv[1:]):
+            print(line)
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":

@@ -112,13 +112,6 @@ class CheckSuiteConfig:
     # pathological conversation lengths (>= ~10^7 turns in one conv).
     drift_chunk_turns: int = 0
 
-    # checkpoint/resume commit granularity: when results are written
-    # through TableIO, the partition-id space is processed as this many
-    # independently committed slices (pid % commit_batches) — a crash
-    # preserves completed slices and the next run resumes from them.
-    # 1 = single commit at end of run (cheapest; no mid-run durability).
-    commit_batches: int = 4
-
     checks: tuple[str, ...] = tuple(c for c in ALL_CHECKS if c != "psi_ks")
 
     def to_json(self) -> str:

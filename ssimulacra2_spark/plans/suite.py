@@ -6,19 +6,15 @@ DAG per check -> Catalyst/AQE plan -> per-partition execution -> results
 MERGE -> driver summary.
 
 Resume: partitions whose verdicts are already COMMITTED for this run_id
-are anti-joined out of BOTH inputs up front — completion is derived from
-the results table itself (distinct partition_id of committed verdicts),
-never from a driver-side partition list, so nothing here is
-O(partitions). The filter sits directly above the scan, so on a
-bucket-partitioned table it prunes file groups (≙ skip_frames
-fast-forward, video.rs:145-153).
+are anti-joined out of BOTH inputs right after `C.prepare` (≙ skip_frames
+fast-forward, video.rs:145-153). Completion is derived from the results
+table itself (distinct partition_id of committed verdicts), never from a
+driver-side partition list, so nothing here is O(partitions). Unlike the
+reference's fast-forward, the filter prunes no files on plain Parquet: a
+resumed run still scans both sides once, and only the uncommitted
+partitions reach the checks.
 
-Commit granularity: with `io`, work is split into cfg.commit_batches
-slices of the partition-id space (pid % commit_batches), each slice
-written+committed independently — a crash preserves completed batches and
-the next run resumes from them. Every per-partition check is
-partition-local (conversations never straddle buckets), so slicing by
-partition id is exact. commit_batches=1 keeps the single-commit behavior.
+With `io`, a run computes the suite once and commits it as one batch.
 """
 
 from __future__ import annotations
@@ -48,44 +44,14 @@ class ValidationSuite:
         run_id: str = "run0",
     ) -> tuple[DataFrame, DataFrame]:
         """Returns (verdicts, violations); if `io` is given, results are
-        written (MERGE) in cfg.commit_batches independent commits and
-        already-committed partitions are skipped."""
-        cfg = self.cfg
-        nb = max(1, cfg.commit_batches) if io is not None else 1
-        if nb == 1:
-            return self._run_slice(spark, ref, cand, io, run_id, None)
-        all_v: list[DataFrame] = []
-        all_x: list[DataFrame] = []
-        for b in range(nb):
-            v, x = self._run_slice(spark, ref, cand, io, run_id, (b, nb))
-            all_v.append(v)
-            all_x.append(x)
-        return (
-            reduce(DataFrame.unionByName, all_v),
-            reduce(DataFrame.unionByName, all_x),
-        )
-
-    def _run_slice(
-        self,
-        spark: SparkSession,
-        ref: DataFrame,
-        cand: DataFrame,
-        io: ParquetTableIO | None,
-        run_id: str,
-        batch: tuple[int, int] | None,
-    ) -> tuple[DataFrame, DataFrame]:
+        written (MERGE) as one commit and already-committed partitions are
+        skipped."""
         cfg = self.cfg
         ref_raw, cand_raw = ref, cand
         # one-pass compact featurization shared by every check (text is
         # decoded exactly once per side; see checks.prepare)
         ref = C.prepare(ref, cfg)
         cand = C.prepare(cand, cfg)
-
-        if batch is not None:
-            b, nb = batch
-            in_batch = F.pmod(F.col("partition_id"), F.lit(nb)) == b
-            ref = ref.filter(in_batch)
-            cand = cand.filter(in_batch)
 
         done = io.completed_partitions(spark, run_id) if io else None
         if done is not None:
@@ -94,9 +60,6 @@ class ValidationSuite:
             cand = cand.join(done, "partition_id", "left_anti")
 
         enabled = set(cfg.checks)
-        if batch is not None and batch[0] != 0:
-            # driver-side schema verdict is batch-independent: emit it once
-            enabled = enabled - {"schema"}
 
         # --- violation-producing checks: build all branches, union, and
         # persist ONCE — verdict counts then reuse the persisted rows

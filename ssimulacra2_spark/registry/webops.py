@@ -412,6 +412,10 @@ ORACLES["boilerplate_segments"] = _boiler_oracle()
 # gaussian (max pairwise cosine ~0.51 at sf0.01), so the "near-dup" bar sits
 # where real corpora would use ~0.95. The pipeline is threshold-agnostic.
 _SEM_TAU = 0.25
+# Most candidate pairs one exact fold-order recompute holds at once: a
+# row block can yield ~2^20 candidates on duplicate-dense cells, and their
+# gathered Xi/Xj rows would be ~0.5-1 GB of float64 per task.
+_SEM_CAND_CHUNK = 1 << 18
 
 _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
@@ -484,6 +488,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         "blk", F.explode(F.array(*[F.lit(i) for i in range(nb)]))
     )
     tau, eps = _SEM_TAU, 5.0123e-8  # _util.EPS6 (r6 adds it before rounding)
+    chunk = _SEM_CAND_CHUNK
 
     def sem_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -546,28 +551,29 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         # declared result is therefore bit-identical to the pure-loop
         # form (pinned by tests/test_properties.py::
         # test_semdedup_blas_prefilter_matches_fold). Row-blocked so the
-        # dgemm output stays allocation-bounded.
+        # dgemm output stays allocation-bounded, and the recompute runs
+        # over at most `chunk` candidates at a time.
         rb = max(32, (1 << 20) // max(1, len(J)))
         cka, ckb, crr = [], [], []
         for r0 in range(0, n, rb):
             r1 = min(r0 + rb, n)
             Cb = NX[r0:r1] @ NXTj
             pre = (Cb >= pre_thr - 1e-9) & (ids[r0:r1, None] < idsj[None, :])
-            ii, jj = np.nonzero(pre)
-            if not len(ii):
-                continue
-            # exact fold-order dot for the candidates only
-            Xi = NX[r0 + ii]
-            Xj = NXTj[:, jj]
-            C = np.zeros(len(ii))
-            for k in range(d):
-                C += Xi[:, k] * Xj[k]
-            R = r6_1d(C + eps)
-            keep = R >= tau
-            if keep.any():
-                cka.append(ids[r0:r1][ii[keep]])
-                ckb.append(idsj[jj[keep]])
-                crr.append(R[keep])
+            ii_all, jj_all = np.nonzero(pre)
+            for c0 in range(0, len(ii_all), chunk):
+                ii, jj = ii_all[c0 : c0 + chunk], jj_all[c0 : c0 + chunk]
+                # exact fold-order dot for the candidates only
+                Xi = NX[r0 + ii]
+                Xj = NXTj[:, jj]
+                C = np.zeros(len(ii))
+                for k in range(d):
+                    C += Xi[:, k] * Xj[k]
+                R = r6_1d(C + eps)
+                keep = R >= tau
+                if keep.any():
+                    cka.append(ids[r0:r1][ii[keep]])
+                    ckb.append(idsj[jj[keep]])
+                    crr.append(R[keep])
         if not cka:
             return empty
         ka = np.concatenate(cka)

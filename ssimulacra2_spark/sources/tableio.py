@@ -6,17 +6,18 @@ tiny JSON manifest providing the three Iceberg behaviors the engine
 relies on:
 
   * snapshot read        -> read a parquet dir (immutable by convention)
-  * MERGE results        -> append parquet per commit batch; the manifest
-                            entry is ONLY a commit marker (an append
-                            without a marker is invisible to readers —
-                            write-then-commit crash atomicity, like an
-                            Iceberg snapshot commit)
+  * MERGE results        -> append one parquet fileset per commit (one
+                            per suite run); the manifest entry is ONLY a
+                            commit marker (an append without a marker is
+                            invisible to readers — write-then-commit
+                            crash atomicity, like an Iceberg snapshot
+                            commit)
   * resume from checkpoint -> completed partitions are derived from the
                             COMMITTED VERDICTS TABLE ITSELF (distinct
                             partition_id scan + anti-join in the suite).
                             Nothing driver-side is O(partitions): the
-                            manifest holds one entry per commit batch, not
-                            per partition, so a 10^6-partition run still
+                            manifest holds one entry per commit, not per
+                            partition, so a 10^6-partition run still
                             carries a ~KB manifest.
 
 Swap `IcebergTableIO` in (same API) when a catalog is available; the plan
@@ -35,16 +36,8 @@ from pyspark.sql import functions as F
 
 
 class ParquetTableIO:
-    def __init__(self, base_dir: str, compact_every: int = 4):
-        """compact_every: after this many committed batches accumulate
-        past the last compaction, write_results folds the newest-wins
-        resolution into ONE compacted snapshot fileset (Iceberg's
-        rewrite_data_files analog). Current reads then touch the snapshot
-        plus at most compact_every-1 tail batches instead of every batch
-        ever committed; raw batches are retained so `as_of` time travel
-        over the commit log is unaffected. 0 disables."""
+    def __init__(self, base_dir: str):
         self.base_dir = base_dir
-        self.compact_every = compact_every
         os.makedirs(base_dir, exist_ok=True)
         self.manifest_path = os.path.join(base_dir, "manifest.json")
 
@@ -248,57 +241,7 @@ class ParquetTableIO:
             }
         )
         self._save_manifest(m)
-        if self.compact_every:
-            batches = self.committed_batches(run_id)
-            if len(self._pending_after_compaction(run_id, batches)) >= self.compact_every:
-                self.compact(verdicts.sparkSession, run_id)
         return batch
-
-    # -- compaction (Iceberg rewrite_data_files analog) ----------------------
-    def _latest_compaction(self, run_id: str, batches: list[str]) -> dict | None:
-        comps = [
-            c
-            for c in self._load_manifest().get("compactions", [])
-            if c["run_id"] == run_id and c["upto"] in batches
-        ]
-        return max(comps, key=lambda c: batches.index(c["upto"])) if comps else None
-
-    def _pending_after_compaction(self, run_id: str, batches: list[str]) -> list[str]:
-        comp = self._latest_compaction(run_id, batches)
-        return batches if comp is None else batches[batches.index(comp["upto"]) + 1 :]
-
-    def _compact_dir(self, run_id: str, upto: str) -> str:
-        return os.path.join(
-            self.base_dir, "verdicts_compact", f"run={run_id}", f"upto={upto}"
-        )
-
-    def compact(self, spark: SparkSession, run_id: str) -> str:
-        """Fold the current newest-wins verdict resolution into one
-        snapshot fileset covering the commit log up to the latest batch;
-        write-then-commit like any other mutation (an unmarked compaction
-        is invisible). Raw batches stay on disk for `as_of` reads."""
-        batches = self.committed_batches(run_id)
-        if not batches:
-            raise ValueError(f"nothing committed for run {run_id!r}")
-        upto = batches[-1]
-        prev = self._latest_compaction(run_id, batches)
-        if prev is not None and prev["upto"] == upto:
-            # nothing committed since the last compaction — rewriting would
-            # overwrite the very snapshot the lazy read plan scans
-            return upto
-        cdir = self._compact_dir(run_id, upto)
-        self.read_verdicts(spark, run_id).write.mode("overwrite").parquet(cdir)
-        m = self._load_manifest()
-        m.setdefault("compactions", []).append(
-            {
-                "run_id": run_id,
-                "upto": upto,
-                "ts": time.time(),
-                "stats": self._fileset_stats(cdir),
-            }
-        )
-        self._save_manifest(m)
-        return upto
 
     def _empty_results(self, spark: SparkSession, kind: str) -> DataFrame:
         from pyspark.sql.types import StringType, StructField, TimestampType
@@ -319,11 +262,8 @@ class ParquetTableIO:
     def _verdict_paths(
         self, run_id: str, as_of: str | None, want: dict | None = None
     ) -> list[str]:
-        """Filesets a current verdict read touches: latest compacted
-        snapshot (if any) + the batch tail after it — bounded by
-        compact_every, not by run length. `as_of` reads use the raw
-        commit-log prefix (time travel is exact regardless of later
-        compactions).
+        """Filesets a verdict read touches: one per committed batch in
+        the commit-log prefix up to `as_of` (all of them when None).
 
         `want` ({col: (lo, hi)}) prunes filesets whose committed manifest
         min/max stats cannot intersect the predicate — Iceberg manifest
@@ -336,17 +276,9 @@ class ParquetTableIO:
             for c in m.get("commits", [])
             if c["run_id"] == run_id
         }
-        batches = self.committed_batches(run_id, as_of)
-        paths: list[str] = []
-        if as_of is None:
-            comp = self._latest_compaction(run_id, batches)
-            if comp is not None:
-                if self._stats_admit(comp.get("stats"), want):
-                    paths.append(self._compact_dir(run_id, comp["upto"]))
-                batches = batches[batches.index(comp["upto"]) + 1 :]
-        paths += [
+        paths = [
             os.path.join(self.base_dir, "verdicts", f"run={run_id}", f"batch={b}")
-            for b in batches
+            for b in self.committed_batches(run_id, as_of)
             if self._stats_admit(batch_stats.get(b), want)
         ]
         return [p for p in paths if os.path.exists(p)]
@@ -375,9 +307,8 @@ class ParquetTableIO:
     ) -> DataFrame:
         """Committed batches only (uncommitted appends are invisible);
         MERGE semantics on read: newest write per (partition_id, check_id).
-        `as_of` pins to a past snapshot (batch id) — time travel. Current
-        reads go through the latest compacted snapshot + batch tail, so
-        cost does not grow with run length. `partition_range=(lo, hi)`
+        `as_of` pins to a past snapshot (batch id) — time travel.
+        `partition_range=(lo, hi)`
         makes the read selective: manifest stats skip non-intersecting
         filesets entirely (their footers are never opened) and the
         residual row filter is pushed to the parquet scan."""
@@ -400,9 +331,7 @@ class ParquetTableIO:
 
         # commit_seq (monotonic commit-log index) is the primary order:
         # written_at alone is a timestamp that two commits can share, which
-        # would make resolution nondeterministic — and once a compaction
-        # folds an ambiguous pick into a snapshot it becomes permanent for
-        # current reads while as_of re-resolves. written_at stays as a
+        # would make resolution nondeterministic. written_at stays as a
         # secondary key for any pre-commit_seq fileset.
         w = Window.partitionBy("partition_id", "check_id").orderBy(
             F.col("commit_seq").desc_nulls_last(), F.col("written_at").desc()

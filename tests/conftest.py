@@ -57,6 +57,8 @@ def synth_tables(spark, synth_cfg, tmp_path_factory):
     return {
         "cfg": cfg,
         "res": res,
+        "ref_path": ref_p,
+        "cand_path": cand_p,
         "ref": ref,
         "cand": cand,
         "partition_of": partition_of,

@@ -29,6 +29,7 @@ def test_removed_key_fails_loudly():
         ("salt_buckets", 8),
         ("hll_rsd", 0.02),
         ("percentile_accuracy", 10_000),
+        ("commit_batches", 4),
     ):
         d = json.loads(CheckSuiteConfig().to_json())
         d[key] = value

@@ -400,18 +400,22 @@ def test_side_filtered_pair_union_equals_filtered_pairs(spark):
 # --------------------------------------------------------------------------
 
 
-def test_semdedup_blas_prefilter_matches_fold(spark, tmp_path):
+def test_semdedup_blas_prefilter_matches_fold(spark, tmp_path, monkeypatch):
     """dedup_semantic's dgemm prefilter (margin-widened) with exact
     dimension-sequential recompute of the sparse candidates must produce
     BIT-identical output to a pure sequential reference — including on
     cosines engineered to land within ~1e-6 of the tau threshold and of
     half-up rounding boundaries, where a prefilter that lost candidates
-    or a value that reached rounding via BLAS would flip flags."""
+    or a value that reached rounding via BLAS would flip flags. The
+    recompute is also run with a candidate chunk small enough to split
+    every duplicate-dense cell into several chunks."""
+    from collections import Counter
     from decimal import ROUND_HALF_UP, Decimal
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from ssimulacra2_spark.registry import webops
     from ssimulacra2_spark.registry.ivf import CENTROIDS
     from ssimulacra2_spark.registry.webops import _SEM_TAU, dedup_semantic
 
@@ -461,10 +465,17 @@ def test_semdedup_blas_prefilter_matches_fold(spark, tmp_path):
     )
     pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
 
-    got = {
-        (r.vec_dup, r.cell, r.keeper, r.max_cosine)
-        for r in dedup_semantic(spark, str(tmp_path)).collect()
-    }
+    def run() -> set:
+        return {
+            (r.vec_dup, r.cell, r.keeper, r.max_cosine)
+            for r in dedup_semantic(spark, str(tmp_path)).collect()
+        }
+
+    got = run()
+    small_chunk = 64
+    with monkeypatch.context() as mp:
+        mp.setattr(webops, "_SEM_CAND_CHUNK", small_chunk)
+        got_chunked = run()
 
     # ---- pure sequential reference (no BLAS anywhere) -----------------
     X = X32.astype(np.float64)
@@ -486,6 +497,7 @@ def test_semdedup_blas_prefilter_matches_fold(spark, tmp_path):
 
     eps = 5.0123e-8
     n_boundary_pairs: list[float] = []
+    dup_pairs: Counter = Counter()
     want: dict[int, tuple[int, int, float]] = {}
     for cell in np.unique(cells):
         idx = np.nonzero(cells == cell)[0]
@@ -508,6 +520,7 @@ def test_semdedup_blas_prefilter_matches_fold(spark, tmp_path):
                 if abs(R - _SEM_TAU) < 5e-6:
                     n_boundary_pairs.append(R)
                 if R >= _SEM_TAU:
+                    dup_pairs[int(cell)] += 1
                     cur = want.get(ib)
                     if cur is None:
                         want[ib] = (int(cell), ia, R)
@@ -515,5 +528,9 @@ def test_semdedup_blas_prefilter_matches_fold(spark, tmp_path):
                         want[ib] = (int(cell), min(cur[1], ia), max(cur[2], R))
     want_set = {(vd, c, kp, mc) for vd, (c, kp, mc) in want.items()}
     assert got == want_set
+    assert got_chunked == want_set
+    # every kept pair is a candidate, so some cell's recompute took
+    # several chunks of small_chunk
+    assert max(dup_pairs.values()) > 2 * small_chunk
     assert len(want_set) > 50  # the fixture actually exercises the path
     assert n_boundary_pairs  # pairs were evaluated inside the rounding band

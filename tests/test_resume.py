@@ -2,12 +2,12 @@
 final results table is identical (SURVEY §5.2 item 5).
 
 Completion is derived from the committed verdicts table itself (distinct
-partition_id anti-join) — the manifest is only a batch commit marker."""
+partition_id anti-join) — the manifest is only a commit marker, one per
+suite run."""
 
 from __future__ import annotations
 
-from dataclasses import replace
-
+import pytest
 from pyspark.sql import functions as F
 
 from ssimulacra2_spark.plans.suite import ValidationSuite
@@ -18,7 +18,7 @@ def test_resume_skips_completed(spark, synth_tables, tmp_path):
     t = synth_tables
     ref = t["ref"].drop("partition_id")
     cand = t["cand"].drop("partition_id")
-    cfg = replace(t["cfg"], commit_batches=1)
+    cfg = t["cfg"]
     suite = ValidationSuite(cfg)
 
     io = ParquetTableIO(str(tmp_path / "results"))
@@ -64,70 +64,57 @@ def test_resume_skips_completed(spark, synth_tables, tmp_path):
     assert merged == full_pp
 
 
-def test_batched_commits_preserve_completed_slices(spark, synth_tables, tmp_path, monkeypatch):
-    """With commit_batches > 1, a crash mid-run preserves the batches
-    already committed; resume computes only the missing partitions and the
-    merged table equals a clean run."""
+def _committed(spark, io, run_id):
+    """Committed verdict and violation rows of a run, sorted."""
+    v = sorted(
+        (r.partition_id, r.check_id, r.passed, r.n_violations, r.score)
+        for r in io.read_verdicts(spark, run_id).collect()
+    )
+    cols = ["partition_id", "check_id", "conv_id", "turn_idx", "class", "observed", "expected"]
+    x = sorted(
+        tuple(r) for r in io.read_violations(spark, run_id).select(*cols).collect()
+    )
+    return v, x
+
+
+def test_crash_before_commit_marker_is_invisible(spark, synth_tables, tmp_path, monkeypatch):
+    """A run commits once, after its filesets are written: a crash before
+    the commit marker leaves nothing visible, and the re-run commits the
+    same rows as an uninterrupted run."""
     t = synth_tables
     ref = t["ref"].drop("partition_id")
     cand = t["cand"].drop("partition_id")
-    cfg = replace(t["cfg"], commit_batches=4)
+    suite = ValidationSuite(t["cfg"])
 
-    # clean single run for the expected result
     io_full = ParquetTableIO(str(tmp_path / "full"))
-    ValidationSuite(cfg).run(spark, ref, cand, io=io_full, run_id="full")
-    expected = {
-        (r.partition_id, r.check_id): (r.passed, r.n_violations)
-        for r in io_full.read_verdicts(spark, "full").collect()
-    }
-    assert len(io_full.committed_batches("full")) == 4
+    suite.run(spark, ref, cand, io=io_full, run_id="full")
+    assert len(io_full.committed_batches("full")) == 1
 
-    # crash after 2 of 4 commits
     io = ParquetTableIO(str(tmp_path / "crashy"))
-    orig = ParquetTableIO.write_results
-    calls = {"n": 0}
 
-    def crashing(self, run_id, verdicts, violations):
-        if calls["n"] >= 2:
-            raise RuntimeError("simulated crash")
-        calls["n"] += 1
-        return orig(self, run_id, verdicts, violations)
+    def crash(self, m):
+        raise RuntimeError("simulated crash before the commit marker")
 
-    monkeypatch.setattr(ParquetTableIO, "write_results", crashing)
-    try:
-        ValidationSuite(cfg).run(spark, ref, cand, io=io, run_id="r")
-    except RuntimeError:
-        pass
-    monkeypatch.setattr(ParquetTableIO, "write_results", orig)
-    committed_mid = io.completed_partition_set(spark, "r")
-    assert 0 < len(committed_mid) < cfg.n_buckets
+    with monkeypatch.context() as mp:
+        mp.setattr(ParquetTableIO, "_save_manifest", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            suite.run(spark, ref, cand, io=io, run_id="r")
+    # the filesets were written, but without a marker no reader sees them
+    assert (tmp_path / "crashy" / "verdicts" / "run=r").is_dir()
+    assert io.committed_batches("r") == []
+    assert io.read_verdicts(spark, "r").count() == 0
+    assert io.completed_partitions(spark, "r") is None
 
-    # resume: remaining slices compute; committed partitions are skipped
-    verdicts2, _ = ValidationSuite(cfg).run(spark, ref, cand, io=io, run_id="r")
-    recomputed = {
-        r.partition_id
-        for r in verdicts2.filter(F.col("partition_id") >= 0)
-        .select("partition_id")
-        .distinct()
-        .collect()
-    }
-    assert recomputed.isdisjoint(committed_mid)
-
-    merged = {
-        (r.partition_id, r.check_id): (r.passed, r.n_violations)
-        for r in io.read_verdicts(spark, "r").collect()
-        if r.partition_id >= 0
-    }
-    assert merged == {k: v for k, v in expected.items() if k[0] >= 0}
+    suite.run(spark, ref, cand, io=io, run_id="r")
+    assert len(io.committed_batches("r")) == 1
+    assert _committed(spark, io, "r") == _committed(spark, io_full, "full")
 
 
-def test_compaction_bounds_read_filesets(spark, tmp_path):
-    """MERGE-on-read cost must not grow with commit count: with
-    compact_every=2, ten commits leave a current read touching at most 2
-    filesets (latest compacted snapshot + tail), newest-wins resolution
-    stays exact, and as_of time travel over the raw commit log is
-    unaffected by compactions."""
-    io = ParquetTableIO(str(tmp_path / "cmp"), compact_every=2)
+def test_merge_on_read_newest_wins_and_as_of(spark, tmp_path):
+    """MERGE-on-read over ten commits: newest-wins resolution is exact,
+    as_of time travel sees exactly the commit-log prefix, and fresh run
+    ids read as typed empty frames."""
+    io = ParquetTableIO(str(tmp_path / "cmp"))
     from ssimulacra2_spark.operators.checks import VERDICT_SCHEMA
 
     for i in range(10):
@@ -138,13 +125,12 @@ def test_compaction_bounds_read_filesets(spark, tmp_path):
 
     batches = io.committed_batches("r")
     assert len(batches) == 10
-    assert len(io._verdict_paths("r", as_of=None)) <= 2
 
     got = {
         r.partition_id: (r.passed, r.n_violations)
         for r in io.read_verdicts(spark, "r").collect()
     }
-    assert got[0] == (False, 9)  # newest write wins through compactions
+    assert got[0] == (False, 9)  # newest write wins
     assert set(got) == set(range(12)) - {11}
 
     # time travel: the view as of commit 4 is exactly commits 0..4
@@ -158,16 +144,6 @@ def test_compaction_bounds_read_filesets(spark, tmp_path):
     assert io.read_verdicts(spark, "nope").count() == 0
     assert io.read_violations(spark, "r").count() == 0
 
-    # explicit double-compact with no new commits is an idempotent no-op
-    # (must NOT overwrite the snapshot its own read plan scans)
-    io.compact(spark, "r")
-    io.compact(spark, "r")
-    again = {
-        r.partition_id: (r.passed, r.n_violations)
-        for r in io.read_verdicts(spark, "r").collect()
-    }
-    assert again == got
-
 
 def test_manifest_stats_skip_filesets(spark, tmp_path):
     """Iceberg manifest file-skipping analog: commit-time min/max stats on
@@ -177,7 +153,7 @@ def test_manifest_stats_skip_filesets(spark, tmp_path):
     pruning never changes newest-wins resolution for the wanted keys."""
     from ssimulacra2_spark.operators.checks import VERDICT_SCHEMA
 
-    io = ParquetTableIO(str(tmp_path / "skip"), compact_every=0)
+    io = ParquetTableIO(str(tmp_path / "skip"))
     for i in range(10):
         # commit i covers partitions [10*i, 10*i+9]; partition 5 is also
         # rewritten by commit 1 (newest-wins must survive pruning; commit
@@ -210,23 +186,25 @@ def test_manifest_stats_skip_filesets(spark, tmp_path):
     }
     assert got5 == {5: (False, 99)}
 
-    # compaction records stats too and a selective read after it opens
-    # snapshot only (tail is empty)
-    io.compact(spark, "r")
-    assert len(io._verdict_paths("r", None, {"partition_id": (35, 35)})) == 1
-
 
 def test_snapshot_time_travel(spark, synth_tables, tmp_path):
     """as_of pins reads to a past commit: the snapshot view equals what a
-    reader saw at that commit, regardless of later appends."""
-    import pytest
-
+    reader saw at that commit, regardless of later appends. Two runs over
+    disjoint partition subsets give the two commits."""
     t = synth_tables
-    ref = t["ref"].drop("partition_id")
-    cand = t["cand"].drop("partition_id")
-    cfg = replace(t["cfg"], commit_batches=2)
+    ref, cand = t["ref"], t["cand"]  # partition ids already assigned
+    pids = sorted(r.partition_id for r in ref.select("partition_id").distinct().collect())
+    first = [int(p) for p in pids[: len(pids) // 2]]
     io = ParquetTableIO(str(tmp_path / "tt"))
-    ValidationSuite(cfg).run(spark, ref, cand, io=io, run_id="r")
+    suite = ValidationSuite(t["cfg"])
+    for keep in (F.col("partition_id").isin(first), ~F.col("partition_id").isin(first)):
+        suite.run(
+            spark,
+            ref.filter(keep).drop("partition_id"),
+            cand.filter(keep).drop("partition_id"),
+            io=io,
+            run_id="r",
+        )
     batches = io.committed_batches("r")
     assert len(batches) == 2
     snap0 = {
@@ -238,9 +216,9 @@ def test_snapshot_time_travel(spark, synth_tables, tmp_path):
         for r in io.read_verdicts(spark, "r").collect()
     }
     assert snap0 < full  # strictly fewer partitions visible at snapshot 0
-    # pinned partitions are exactly slice 0 of the pid space (plus schema)
-    pids0 = {p for p, _ in snap0 if p >= 0}
-    assert pids0 and all(p % 2 == 0 for p in pids0)
+    # pinned partitions are exactly the first subset, plus the schema row
+    assert {p for p, _ in snap0 if p >= 0} == set(first)
+    assert {c for p, c in snap0 if p < 0} == {"schema"}
     with pytest.raises(KeyError):
         io.committed_batches("r", as_of="nonexistent")
 
@@ -257,7 +235,7 @@ def test_resume_across_pre_commit_seq_filesets(spark, tmp_path):
 
     from ssimulacra2_spark.operators.checks import VERDICT_SCHEMA
 
-    io = ParquetTableIO(str(tmp_path / "mix"), compact_every=0)
+    io = ParquetTableIO(str(tmp_path / "mix"))
     io.write_results(
         "r",
         spark.createDataFrame(
