@@ -75,8 +75,6 @@ def stage_pair(
     n_turns: int,
     n_convs: int,
     base_dir: str,
-    layout: str = "clustered",
-    n_buckets: int = 0,
 ) -> tuple[DataFrame, DataFrame]:
     """Write the (ref, cand) pair to `base_dir` as CONVERSATION-CLUSTERED
     parquet and return readers for both.
@@ -105,24 +103,12 @@ def stage_pair(
     clustered by bucket(conv_id, turn_bucket) with a target file size,
     which this layout emulates.
 
-    layout="bucketed" writes BOTH sides hash-bucketed by conv_id (sorted
-    by (conv_id, turn_idx) within buckets) through TableIO.write_snapshot:
-    the suite's two fact shuffles — the text-parity (conv, turn) join and
-    the order+unique (conv, chunk) window — then run exchange-free
-    straight off the scans (plan-guarded in tests/test_plan_shapes.py).
-    This is the layout a 100 TB deployment writes once at ingest and
-    amortizes over every validation run."""
+    Both sides are read back as plain parquet, with no bucketing or
+    catalog table in between: conversation clustering (the run-length
+    effect of "Column Partition and Permutation for Run Length Encoding
+    in Columnar Databases", SIGMOD 2020) is the part of the layout a scan
+    here profits from."""
     ref_path, cand_path = f"{base_dir}/ref", f"{base_dir}/cand"
-    if layout == "bucketed":
-        from .sources.tableio import ParquetTableIO
-
-        io = ParquetTableIO(f"{base_dir}/snapmeta")
-        nb = n_buckets or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        kw = dict(bucket_by=("conv_id",), n_buckets=nb, sort_by=("conv_id", "turn_idx"))
-        io.write_snapshot(make_transcripts(spark, n_turns, n_convs), ref_path, **kw)
-        ref = io.read_snapshot(spark, ref_path)
-        io.write_snapshot(distort(ref), cand_path, **kw)
-        return ref, io.read_snapshot(spark, cand_path)
     par = spark.sparkContext.defaultParallelism
     # file count stays at ONE file per core: a 4-waves-per-core variant
     # (n_files = 4*par, to cut the last scan wave's tail) was built and

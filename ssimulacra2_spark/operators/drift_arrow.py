@@ -371,11 +371,11 @@ def drift_scores(ref: DataFrame, cand: DataFrame, cfg: CheckSuiteConfig) -> Data
 
 def drift_verdicts(scores: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:
     """drift_score verdicts over (partition_id, score) rows, passing at
-    cfg.score_threshold; a NULL score (no paired rows) passes."""
+    cfg.score_threshold; a NULL score (no paired rows) fails."""
     return verdict(
         scores,
         "drift_score",
-        passed=F.coalesce(F.col("score") >= cfg.score_threshold, F.lit(True)),
+        passed=F.coalesce(F.col("score") >= cfg.score_threshold, F.lit(False)),
         n_violations=F.lit(0),
         score=F.col("score"),
     )

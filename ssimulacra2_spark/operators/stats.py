@@ -92,9 +92,11 @@ def rollup(ref: DataFrame, cand: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:
 
 def profile_verdicts(roll: DataFrame, checks, cfg: CheckSuiteConfig) -> DataFrame:
     """One verdict row per (rollup row, check in `checks`), from one
-    explode(array(struct per check)) projection. A check that is not a
-    profile check (the violation checks, drift_score) starts at a vacuous
-    pass (True, 0, NULL) for the suite to overlay with what it measured."""
+    explode(array(struct per check)) projection. The violation checks
+    start at a vacuous pass (True, 0, NULL) and drift_score at a failure
+    (False, 0, NULL), for the suite to overlay with what it measured: a
+    partition without paired rows has no drift score, and fails like
+    psi_ks and emb_drift do without data."""
     n_ref, n_cand, nulls = F.col("n_ref"), F.col("n_cand"), F.col("text_nulls")
     enough = n_ref >= cfg.min_rows_per_partition
     within = (F.col("psi") <= cfg.psi_threshold) & (F.col("ks") <= cfg.ks_threshold)
@@ -112,6 +114,8 @@ def profile_verdicts(roll: DataFrame, checks, cfg: CheckSuiteConfig) -> DataFram
             F.lit(0),
             F.col("cos"),
         ),
+        # measured only over paired (conv_id, turn_idx) rows
+        "drift_score": (F.lit(False), F.lit(0), F.lit(None)),
     }
     structs = []
     for c in checks:

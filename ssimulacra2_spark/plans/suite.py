@@ -103,8 +103,9 @@ class ValidationSuite:
         verdicts = spark.createDataFrame([], C.VERDICT_SCHEMA)
         if per_part:
             verdicts = profile_verdicts(rollup(ref, cand, cfg), per_part, cfg)
-            # the violation checks and drift_score start at a vacuous pass
-            # (True, 0, NULL); overlay what they measured
+            # the violation checks start at a vacuous pass (True, 0, NULL)
+            # and drift_score at a no-data failure (False, 0, NULL);
+            # overlay what they measured
             measured = []
             if viol_dfs:
                 counts = violations.groupBy("partition_id", "check_id").agg(

@@ -95,15 +95,16 @@ def get_spark(
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Accept subset co-partitioning for joins: two snapshots bucketed
-        # by conv_id can sort-merge-join on (conv_id, turn_idx) with ZERO
-        # exchange (HashPartitioning(conv_id) satisfies the clustered
-        # distribution of the superset key). Only kicks in when both sides
-        # already share a compatible partitioning — the bucketed-snapshot
-        # layout (sources/tableio.write_snapshot / benchgen.stage_pair);
-        # plans without pre-partitioned children are unchanged. Skew risk
-        # is the engine's own partition unit (conversations), already
-        # handled by chunking/salting above the scan.
+        # Accept subset co-partitioning for joins: a join on (a, b) whose
+        # sides are both already hash-partitioned by a alone needs no new
+        # exchange. Planning the 113 sf0.001 registry queries and the
+        # 12-check suite with the setting true and false, false removes:
+        #   - the rollup side's hashpartitioning(partition_id, check_id)
+        #     exchange under the suite's verdict-overlay left join
+        #     (17 -> 16 exchanges; pinned in tests/test_plan_shapes.py);
+        #   - exchanges from ann_ivf_recall (9 -> 6), ann_lsh_recall
+        #     (11 -> 9) and ann_pq_recall (15 -> 13).
+        # No other registry plan changes.
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")

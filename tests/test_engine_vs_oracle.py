@@ -110,12 +110,18 @@ def one_sided(spark, synth_cfg, tmp_path_factory):
 def test_one_sided_partitions(one_sided):
     """A partition with rows on one side only gets a row for every check:
     psi_ks and emb_drift fail with a NULL score, min_rows fails a
-    cand-only partition, column_stats passes a ref-only one vacuously."""
+    cand-only partition, column_stats passes a ref-only one vacuously.
+    drift_score fails with a NULL score wherever no (conv_id, turn_idx)
+    pairs, which includes partitions with rows on both sides."""
     t, pof = one_sided, one_sided["partition_of"]
     ref_p = {pof[c] for c in t["ref"].conv_id}
     cand_p = {pof[c] for c in t["cand"].conv_id}
     ref_only, cand_only = ref_p - cand_p, cand_p - ref_p
     assert ref_only and cand_only
+    keys = ["conv_id", "turn_idx"]
+    paired_p = {pof[c] for c in t["ref"][keys].merge(t["cand"][keys], on=keys).conv_id}
+    unpaired = (ref_p | cand_p) - paired_p
+    assert (len(ref_only), len(cand_only), len(unpaired)) == (13, 9, 29)
     got = {(r.partition_id, r.check_id): (r.passed, r.n_violations, r.score) for r in t["rows"]}
     assert {k for k in got if k[0] >= 0} == {
         (p, c) for p in ref_p | cand_p for c in ALL_CHECKS if c != "schema"
@@ -127,6 +133,10 @@ def test_one_sided_partitions(one_sided):
         assert got[(p, "min_rows")] == (False, 1, 0.0), p
     for p in ref_only:
         assert got[(p, "column_stats")] == (True, 0, None), p
+    for p in unpaired:
+        assert got[(p, "drift_score")] == (False, 0, None), p
+    for p in paired_p:
+        assert got[(p, "drift_score")][2] is not None, p
 
 
 @pytest.mark.parametrize("pair", ["synth", "one_sided"])

@@ -145,48 +145,6 @@ def test_merge_on_read_newest_wins_and_as_of(spark, tmp_path):
     assert io.read_violations(spark, "r").count() == 0
 
 
-def test_manifest_stats_skip_filesets(spark, tmp_path):
-    """Iceberg manifest file-skipping analog: commit-time min/max stats on
-    (partition_id, check_id) let a selective read prune whole filesets —
-    after 10 commits over disjoint partition ranges, reading one partition
-    opens at most 2 filesets (here: exactly the 1 containing it), and
-    pruning never changes newest-wins resolution for the wanted keys."""
-    from ssimulacra2_spark.operators.checks import VERDICT_SCHEMA
-
-    io = ParquetTableIO(str(tmp_path / "skip"))
-    for i in range(10):
-        # commit i covers partitions [10*i, 10*i+9]; partition 5 is also
-        # rewritten by commit 1 (newest-wins must survive pruning; commit
-        # 1's stats widen to [5, 19] — still disjoint from the probe below)
-        rows = [(10 * i + j, "chk", True, i, None) for j in range(10)]
-        if i == 1:
-            rows.append((5, "chk", False, 99, None))
-        io.write_results("r", spark.createDataFrame(rows, schema=VERDICT_SCHEMA), None)
-
-    assert len(io.committed_batches("r")) == 10
-    # stats were recorded at commit time for every batch
-    m = io._load_manifest()
-    assert all(c.get("stats", {}).get("partition_id") for c in m["commits"])
-
-    # selective read: only the fileset whose range covers the key is opened
-    assert len(io._verdict_paths("r", None, {"partition_id": (35, 35)})) == 1
-    assert len(io._verdict_paths("r", None)) == 10  # non-selective unchanged
-    got = {
-        r.partition_id: r.n_violations
-        for r in io.read_verdicts(spark, "r", partition_range=(35, 35)).collect()
-    }
-    assert got == {35: 3}
-
-    # pruning keeps EVERY fileset that may hold the wanted key: partition 5
-    # lives in commits 0 and 1, so both are read and commit 1 wins
-    assert len(io._verdict_paths("r", None, {"partition_id": (5, 5)})) == 2
-    got5 = {
-        r.partition_id: (r.passed, r.n_violations)
-        for r in io.read_verdicts(spark, "r", partition_range=(5, 5)).collect()
-    }
-    assert got5 == {5: (False, 99)}
-
-
 def test_snapshot_time_travel(spark, synth_tables, tmp_path):
     """as_of pins reads to a past commit: the snapshot view equals what a
     reader saw at that commit, regardless of later appends. Two runs over
@@ -230,7 +188,8 @@ def test_resume_across_pre_commit_seq_filesets(spark, tmp_path):
     (UNRESOLVED_COLUMN) or silently nulled depended on path order;
     read_verdicts must instead merge schemas, backfill commit_seq for the
     old fileset, and resolve newest-wins with old rows losing to any
-    sequenced commit (nulls_last)."""
+    sequenced commit (nulls_last). Manifest keys older engines wrote are
+    read past."""
     import shutil
 
     from ssimulacra2_spark.operators.checks import VERDICT_SCHEMA
@@ -245,12 +204,30 @@ def test_resume_across_pre_commit_seq_filesets(spark, tmp_path):
         None,
     )
     # emulate a pre-upgrade fileset: rewrite batch 0 without commit_seq
-    old_dir = io._verdict_paths("r", None)[0]
+    old_dir = io._batch_paths("verdicts", "r")[0]
     stripped = str(tmp_path / "stripped")
     spark.read.parquet(old_dir).drop("commit_seq").write.parquet(stripped)
     shutil.rmtree(old_dir)
     shutil.move(stripped, old_dir)
     assert "commit_seq" not in spark.read.parquet(old_dir).columns
+
+    # and a pre-upgrade manifest: older engines recorded per-commit
+    # partition_id/check_id min/max "stats" and a "snapshots" map of
+    # bucketed input layouts; both are ignored now
+    snap = str(tmp_path / "snap")
+    spark.range(3).write.parquet(snap)
+    m = io._load_manifest()
+    m["commits"][0]["stats"] = {"partition_id": [0, 1], "check_id": ["chk", "chk"]}
+    m["snapshots"] = {
+        snap: {
+            "table": "snap_0123456789ab",
+            "bucket_by": ["conv_id"],
+            "n_buckets": 4,
+            "sort_by": ["conv_id", "turn_idx"],
+        }
+    }
+    io._save_manifest(m)
+    assert io.read_snapshot(spark, snap).count() == 3
 
     # new engine commits a batch rewriting partition 0
     io.write_results(
@@ -263,6 +240,8 @@ def test_resume_across_pre_commit_seq_filesets(spark, tmp_path):
         for r in io.read_verdicts(spark, "r").collect()
     }
     assert got == {0: (False, 7), 1: (True, 0)}
+    assert io.completed_partition_set(spark, "r") == {0, 1}
+    assert "stats" in io._load_manifest()["commits"][0]  # old keys survive a commit
 
     # the all-old-filesets path also reads cleanly (backfilled column)
     v0 = io.read_verdicts(spark, "r", as_of=io.committed_batches("r")[0])
