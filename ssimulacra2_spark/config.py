@@ -93,25 +93,6 @@ class CheckSuiteConfig:
     # over a tiny per-chunk summary (see checks.order_unique_violations)
     monotone_chunk_turns: int = 8192
 
-    # drift kernel fanout WITHIN a verdict bucket: the applyInPandas group key
-    # is (partition_id, pmod(hash(conv_id), drift_subbuckets)) so one pandas
-    # batch holds ~rows/(n_buckets*drift_subbuckets) rows regardless of how
-    # coarse the verdict bucketing is. Conversations never straddle
-    # sub-buckets; partial sums merge downstream, so results are identical.
-    drift_subbuckets: int = 16
-    # Chunked drift kernel (0 = off): bounds one pandas batch by this many
-    # JOINED turns even when a single conversation exceeds a whole
-    # sub-bucket's memory budget (a conversation hashes entirely to one
-    # (bucket, sub-bucket) — the one skew drift_subbuckets can't split).
-    # Positions are ranked two-phase (per (conv, turn-range) windows, no
-    # whole-conversation window), rows are halo-duplicated to neighbor
-    # chunks (< 2% at the value below), and each chunk emits partial sums
-    # only for the scale outputs it owns. Must be a multiple of
-    # 2^num_scales and >= 2*halo_turns(cfg). Off by default: it costs two
-    # extra fact exchanges, worth paying only for corpora with
-    # pathological conversation lengths (>= ~10^7 turns in one conv).
-    drift_chunk_turns: int = 0
-
     checks: tuple[str, ...] = tuple(c for c in ALL_CHECKS if c != "psi_ks")
 
     def to_json(self) -> str:

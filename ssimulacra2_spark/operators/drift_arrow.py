@@ -1,24 +1,27 @@
 """Arrow-vectorized drift scoring — the engine's one drift_score kernel.
 
 The SSIMULACRA2 pipeline (≙ lib.rs:84-487; the pandas oracle in oracle.py
-computes the same math) executed as ONE applyInPandas over partition
-buckets:
+computes the same math) executed as ONE mapInArrow over the pair join:
 
-  featurize in Spark expressions (JVM, codegen) -> pair join ->
-  one shuffle by partition_id -> per-batch numpy computes masked
-  kernel smoothing / ssim+edgediff maps / multi-scale rollup ->
-  per (channel, scale, map) partial sums -> tiny metrics rows out.
+  featurize in Spark expressions (JVM, codegen) -> pair join on rows
+  clustered by conversation, sorted by turn -> per Arrow batch numpy
+  computes masked kernel smoothing / ssim+edgediff maps / multi-scale
+  rollup -> per (partition_id, channel, scale, map) partial sums -> one
+  tiny batch of partial rows per task.
 
 Why it scales:
 - featurization happens BEFORE the exchange, so the shuffle moves
-  2 x len(channels) doubles per row, never text payloads;
-- conversations never straddle buckets, so each Arrow batch is complete
-  and the numpy kernels are exact;
+  2 x len(channels) f32 values per row, never text payloads;
+- a conversation never straddles tasks, so a task sees whole
+  conversations in turn order; the one still open at the end of an Arrow
+  batch is carried into the next batch, and one longer than a segment is
+  scored in owned, halo-padded segments — a task holds one batch plus
+  one segment in Python, whatever the skew;
 - the per-element math is vectorized ACROSS conversations (boundary masks
-  instead of per-conversation loops) — a batch with one hot conversation
-  costs the same as a batch of many small ones;
-- output is ~(buckets x channels x scales x 3) partial rows — nothing
-  driver-side; the final merge is a trivial groupBy.
+  instead of per-conversation loops), once per Arrow batch — no pandas,
+  no per-group calls;
+- output is ~(tasks x partition ids x channels x scales x 3) partial
+  rows, merged by one small groupBy.
 
 Reference analog: the per-frame score kernel behind the worker pool
 (video.rs:407-456) with rayon-style data parallelism inside each score
@@ -28,7 +31,6 @@ Reference analog: the per-frame score kernel behind the worker pool
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -74,8 +76,9 @@ def channel_expr(channel: str):
     if channel == "len":
         e = F.least(F.length(t), F.lit(2048)).cast("double") / 2048.0
     elif channel == "tok":
-        # tokens = space-runs + 1 == size(split(t, ' +')) but without the
-        # per-row array allocation (profiled: split dominated the scan)
+        # tokens = space-runs + 1. regexp_count is runtime-replaceable:
+        # Spark plans it as size(regexp_extract_all(t, ' +', 0)), so it
+        # still builds one array of matches per row
         e = F.least(F.regexp_count(t, F.lit(" +")) + 1, F.lit(512)).cast("double") / 512.0
     elif channel == "hash":
         e = F.pmod(F.xxhash64(t), F.lit(4096)).cast("double") / 4096.0
@@ -124,18 +127,14 @@ def _smooth_many(
     return [num / den for num in nums]
 
 
-def _downsample_masked(
-    v1: np.ndarray,
-    v2: np.ndarray,
-    run_id: np.ndarray,
-    g: np.ndarray | None = None,
-):
+def _downsample_masked(v1: np.ndarray, v2: np.ndarray, run_id: np.ndarray):
     """Edge-clamped pairwise 2x mean per conversation run (vectorized;
-    ≙ downscale_by_2's odd-edge clamp, lib.rs:181-182). `g` optionally
-    carries each row's GLOBAL scale-index (chunked path): kept rows'
-    next-scale global index is g//2 — exact because chunk segments start
-    at positions aligned to 2^num_scales, so run-relative parity equals
-    global parity at every scale."""
+    ≙ downscale_by_2's odd-edge clamp, lib.rs:181-182). Returns the
+    next-scale series and the keep mask; every per-row array that rides
+    along (run id, partition index, global position) is indexed by the
+    same mask. A segment starting at a position aligned to 2^num_scales
+    has run-relative parity equal to global parity at every scale, so a
+    kept row's next-scale global position is its position // 2."""
     n = len(v1)
     idx = np.arange(n)
     starts = np.ones(n, dtype=bool)
@@ -150,10 +149,7 @@ def _downsample_masked(
     same[:-1] = run_id[:-1] == run_id[1:]
     p1 = np.where(same, v1[nxt], v1)
     p2 = np.where(same, v2[nxt], v2)
-    out = (((v1 + p1) / 2.0)[keep], ((v2 + p2) / 2.0)[keep], run_id[keep])
-    if g is None:
-        return out
-    return (*out, g[keep] // 2)
+    return ((v1 + p1) / 2.0)[keep], ((v2 + p2) / 2.0)[keep], keep
 
 
 def _ssim_maps(v1, v2, mu1, mu2, s11, s22, s12):
@@ -165,82 +161,14 @@ def _ssim_maps(v1, v2, mu1, mu2, s11, s22, s12):
     return d_ssim, np.maximum(d1, 0.0), np.maximum(-d1, 0.0)
 
 
-def _make_partials_fn(cfg: CheckSuiteConfig, chunked: bool):
-    """ONE kernel body for both the whole-sub-bucket and the chunked
-    paths (they must never diverge — a math fix applied to one copy and
-    not the other is exactly the bug class this prevents). The chunked
-    variant differs only in its sort key (dense pos instead of turn_idx),
-    the carried global-index array, and the ownership mask applied to the
-    partial sums."""
-    taps = np.asarray(KERNEL_TAPS)
-    channels = tuple(cfg.channels)
-    num_scales = cfg.num_scales
-    C = cfg.drift_chunk_turns
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        order = "pos" if chunked else "turn_idx"
-        pdf = pdf.sort_values(["conv_key", "conv_key2", order], kind="mergesort")
-        pid = int(pdf["partition_id"].iloc[0])
-        k = int(pdf["chunk"].iloc[0]) if chunked else 0
-        conv = pdf["conv_key"].to_numpy()
-        conv2 = pdf["conv_key2"].to_numpy()
-        g0 = pdf["pos"].to_numpy(np.int64) if chunked else None
-        starts = np.ones(len(pdf), dtype=bool)
-        starts[1:] = (conv[1:] != conv[:-1]) | (conv2[1:] != conv2[:-1])
-        run_id0 = np.cumsum(starts)
-        out = []
-        for ch in channels:
-            # batch arrives as f32 (exchange + Arrow IPC at half width);
-            # upcast ONCE — all kernel math and partial sums stay f64 so
-            # the 1e-9 oracle parity holds (the oracle quantizes its
-            # featurized channels to f32 at the same point)
-            v1 = pdf[f"v1_{ch}"].to_numpy(np.float64)
-            v2 = pdf[f"v2_{ch}"].to_numpy(np.float64)
-            rid, g = run_id0, g0
-            for s in range(num_scales):
-                if s > 0:
-                    if chunked:
-                        v1, v2, rid, g = _downsample_masked(v1, v2, rid, g)
-                    else:
-                        v1, v2, rid = _downsample_masked(v1, v2, rid)
-                if chunked:
-                    own = (g >= (k * C) >> s) & (g < ((k + 1) * C) >> s)
-                    n_own = int(own.sum())
-                else:
-                    own = slice(None)
-                    n_own = len(v1)
-                mu1, mu2, s11, s22, s12 = _smooth_many(
-                    [v1, v2, v1 * v1, v2 * v2, v1 * v2], rid, taps
-                )
-                d_ssim, artifact, detail = _ssim_maps(v1, v2, mu1, mu2, s11, s22, s12)
-                for m, arr in (("ssim", d_ssim), ("artifact", artifact), ("detail", detail)):
-                    a = arr[own]
-                    out.append((pid, ch, s, m, float(a.sum()), float((a**4).sum()), n_own))
-        return pd.DataFrame(
-            out,
-            columns=["partition_id", "channel", "scale", "map", "sum_d", "sum_d4", "n"],
-        )
-
-    return fn
-
-
-def drift_partials(paired: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:
-    """paired: (partition_id, conv_id, turn_idx, v1_<ch>, v2_<ch> ...) —
-    one applyInPandas per partition bucket emitting partial sums."""
-    # group by (partition_id, sub-bucket): a whole verdict bucket can be
-    # ~dataset/n_buckets rows — too big for one pandas batch at scale. The
-    # sub-bucket is a function of the conversation key, so conversations
-    # never straddle sub-buckets and the smoothing/rollup stays exact; the
-    # partial-sum schema (sum_d, sum_d4, n) merges across sub-buckets in
-    # the downstream groupBy for free. Per-task memory is then bounded by
-    # rows/(n_buckets * drift_subbuckets) * (2*channels + 3) doubles.
-    return paired.groupBy("partition_id", "drift_sub").applyInPandas(
-        _make_partials_fn(cfg, chunked=False), schema=_PARTIAL_SCHEMA
-    )
+_MAPS = ("ssim", "artifact", "detail")
+# an open conversation carried past this many turns (plus the halo) is
+# scored in owned, halo-padded segments of this many turns
+_SEGMENT_TURNS = 1 << 16
 
 
 def halo_turns(cfg: CheckSuiteConfig) -> int:
-    """Halo width for the chunked kernel: every scale-s output consumed
+    """Halo width around a segment: every scale-s output consumed
     downstream needs r smoothing neighbors at scale s plus the 2x
     pyramid support, i.e. < (r+1)*2^s original positions per scale;
     (r+1)*2^num_scales bounds the total and keeps the halo a multiple of
@@ -249,80 +177,148 @@ def halo_turns(cfg: CheckSuiteConfig) -> int:
     return (r + 1) << cfg.num_scales
 
 
-def drift_partials_chunked(paired: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:
-    """Chunked variant of drift_partials for the one case the sub-bucket
-    bound cannot help: a SINGLE conversation too large for one pandas
-    batch (it hashes entirely to one (bucket, sub-bucket)).
-
-    paired must carry `pos` (dense per-conversation rank over the JOINED
-    pair series — computed skew-safely upstream) . Each row is exploded
-    to its own chunk plus the neighboring chunk within `halo_turns`
-    positions (~2H/C duplication, <2% at the default chunk size); one
-    batch = (partition_id, drift_sub, chunk). Inside the batch the full
-    pyramid runs over core+halo, but partial sums only count outputs the
-    chunk OWNS — global scale-s index in [k*C/2^s, (k+1)*C/2^s) — so
-    every output is counted exactly once across chunks and halo-edge
-    garbage (truncated smoothing support, mid-series clamp) never
-    escapes: it lives >= r outside the owned range by the halo bound.
-    Property-pinned equal to the unchunked kernel at 1e-12
-    (tests/test_properties.py::test_drift_chunked_matches_unchunked)."""
-    return paired.groupBy("partition_id", "drift_sub", "chunk").applyInPandas(
-        _make_partials_fn(cfg, chunked=True), schema=_PARTIAL_SCHEMA
-    )
+def _run_starts(cols) -> np.ndarray:
+    """True at every row that starts a conversation (rows sorted by
+    conversation and turn)."""
+    conv, conv2 = cols["conv_key"], cols["conv_key2"]
+    starts = np.ones(len(conv), dtype=bool)
+    starts[1:] = (conv[1:] != conv[:-1]) | (conv2[1:] != conv2[:-1])
+    return starts
 
 
-def _with_chunks(paired: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:
-    """Dense per-conversation positions over the joined pair series +
-    halo-duplicated chunk targets — every window here is per
-    (conversation, turn-range chunk), never whole-conversation (same
-    two-phase prefix pattern as sessionize_gap / monotone_ts)."""
-    from pyspark.sql.window import Window
+def _partial_sums(cols, channels, num_scales, taps, t0=0, lo=0, hi=None):
+    """Kernel over flat rows sorted by conversation and turn: (pids, sums)
+    with sums[i, channel, scale, map] = (sum_d, sum_d4, n) over the rows
+    of partition id pids[i].
 
-    C = cfg.drift_chunk_turns
-    H = halo_turns(cfg)
-    if C % (1 << cfg.num_scales) or C < 2 * H:
-        raise ValueError(
-            f"drift_chunk_turns must be a multiple of 2^num_scales and >= "
-            f"2*halo ({2 * H}); got {C}"
+    All conversations are complete unless `lo`/`hi` is given: then the
+    rows are ONE conversation holding global positions [t0, t0 + rows),
+    and only the scale-s outputs at global index [lo >> s, hi >> s) (hi
+    None: to the end) are counted."""
+    pids, px0 = np.unique(cols["partition_id"], return_inverse=True)
+    n = len(px0)
+    run0 = np.cumsum(_run_starts(cols))
+    masked = lo > 0 or hi is not None
+    out = np.zeros((len(pids), len(channels), num_scales, len(_MAPS), 3))
+    for c, ch in enumerate(channels):
+        # batch arrives as f32 (exchange + Arrow IPC at half width);
+        # upcast ONCE — all kernel math and partial sums stay f64 so the
+        # 1e-9 oracle parity holds (the oracle quantizes its featurized
+        # channels to f32 at the same point)
+        v1 = cols[f"v1_{ch}"].astype(np.float64)
+        v2 = cols[f"v2_{ch}"].astype(np.float64)
+        rid, px = run0, px0
+        g = t0 + np.arange(n) if masked else None
+        for s in range(num_scales):
+            if s > 0:
+                v1, v2, keep = _downsample_masked(v1, v2, rid)
+                rid, px = rid[keep], px[keep]
+                if masked:
+                    g = g[keep] // 2
+            mu1, mu2, s11, s22, s12 = _smooth_many(
+                [v1, v2, v1 * v1, v2 * v2, v1 * v2], rid, taps
+            )
+            maps = _ssim_maps(v1, v2, mu1, mu2, s11, s22, s12)
+            pxo = px
+            if masked:
+                own = g >= lo >> s
+                if hi is not None:
+                    own &= g < hi >> s
+                pxo = px[own]
+                maps = [a[own] for a in maps]
+            out[:, c, s, :, 2] = np.bincount(pxo, minlength=len(pids))[:, None]
+            for m, a in enumerate(maps):
+                out[:, c, s, m, 0] = np.bincount(pxo, weights=a, minlength=len(pids))
+                out[:, c, s, m, 1] = np.bincount(pxo, weights=a**4, minlength=len(pids))
+    return pids, out
+
+
+def _partials_fn(cfg: CheckSuiteConfig):
+    """mapInArrow body over one task's rows, sorted by (conv_key,
+    conv_key2, turn_idx). Each Arrow batch is cut at its last
+    conversation boundary: the rows before the cut are scored in one
+    kernel call, the open conversation is carried into the next batch.
+    Once it reaches own_from + SEG + H rows, [t0, own_from + SEG + H) is
+    scored counting only the outputs in [own_from, own_from + SEG), and
+    its rows from own_from + SEG - H on are kept: every output is counted
+    once, and halo-edge garbage (truncated smoothing support, mid-series
+    clamp) stays outside the owned range."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    taps = np.asarray(KERNEL_TAPS)
+    channels = tuple(cfg.channels)
+    num_scales = cfg.num_scales
+    seg, h = _SEGMENT_TURNS, halo_turns(cfg)
+    if seg % (1 << num_scales):
+        raise ValueError(f"segment length {seg} is not a multiple of 2^num_scales")
+    schema = to_arrow_schema(_PARTIAL_SCHEMA)
+
+    def fn(batches):
+        acc: dict[int, np.ndarray] = {}
+
+        def add(cols, *window):
+            pids, sums = _partial_sums(cols, channels, num_scales, taps, *window)
+            for p, part in zip(pids.tolist(), sums):
+                acc[p] = acc.get(p, 0) + part
+
+        def rows(cols, a, b=None):
+            return {k: v[a:b] for k, v in cols.items()}
+
+        carry: dict[str, np.ndarray] = {}
+        t0 = own_from = 0  # carry holds global positions [t0, ...); < own_from counted
+        for rb in batches:
+            cols = {
+                name: col.to_numpy(zero_copy_only=False)
+                for name, col in zip(rb.schema.names, rb.columns)
+            }
+            if carry:
+                cols = {k: np.concatenate([carry[k], v]) for k, v in cols.items()}
+            bound = np.flatnonzero(_run_starts(cols)[1:]) + 1
+            if len(bound):
+                cut = int(bound[-1])
+                if own_from:  # the carried conversation was segmented
+                    first = int(bound[0])
+                    add(rows(cols, 0, first), t0, own_from)
+                    if first < cut:
+                        add(rows(cols, first, cut))
+                else:
+                    add(rows(cols, 0, cut))
+                cols = rows(cols, cut)
+                t0 = own_from = 0
+            carry = cols
+            while t0 + len(carry["partition_id"]) >= own_from + seg + h:
+                add(rows(carry, 0, own_from + seg + h - t0), t0, own_from, own_from + seg)
+                carry = rows(carry, own_from + seg - h - t0)
+                t0, own_from = own_from + seg - h, own_from + seg
+        if carry:
+            add(carry, t0, own_from)
+        if not acc:
+            return
+        pids = sorted(acc)
+        sums = np.stack([acc[p] for p in pids])  # (pid, channel, scale, map, 3)
+        p, c, sc, m = np.indices(sums.shape[:4]).reshape(4, -1)
+        flat = sums.reshape(-1, 3)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.asarray(pids, dtype=np.int32)[p]),
+                pa.array(np.asarray(channels)[c]),
+                pa.array(sc.astype(np.int32)),
+                pa.array(np.asarray(_MAPS)[m]),
+                pa.array(flat[:, 0]),
+                pa.array(flat[:, 1]),
+                pa.array(flat[:, 2].astype(np.int64)),
+            ],
+            schema=schema,
         )
-    keys = ["conv_key", "conv_key2"]
-    d = paired.withColumn("tchunk", F.floor(F.col("turn_idx") / C))
-    w_in = Window.partitionBy(*keys, "tchunk").orderBy("turn_idx")
-    d = d.withColumn("rn_in", F.row_number().over(w_in) - 1)
-    cnt = d.groupBy(*keys, "tchunk").agg(F.count("*").alias("n_in"))
-    w_off = (
-        Window.partitionBy(*keys)
-        .orderBy("tchunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    off = cnt.withColumn(
-        "t_off", F.coalesce(F.sum("n_in").over(w_off), F.lit(0))
-    ).select(*keys, "tchunk", "t_off")
-    d = d.join(off, [*keys, "tchunk"]).withColumn(
-        "pos", (F.col("rn_in") + F.col("t_off")).cast("long")
-    )
-    posc = F.col("pos") % C
-    base = F.floor(F.col("pos") / C)
-    targets = F.filter(
-        F.array(
-            base,
-            F.when(posc < H, base - 1),
-            F.when(posc >= C - H, base + 1),
-        ),
-        lambda x: x.isNotNull() & (x >= 0),
-    )
-    return d.withColumn("chunk", F.explode(targets)).drop(
-        "tchunk", "rn_in", "t_off", "turn_idx"
-    )
+
+    return fn
 
 
-def drift_scores(ref: DataFrame, cand: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:
-    """(partition_id, score): the per-partition calibrated
-    SSIMULACRA2-style score over the paired channel series, for every
-    partition with paired rows. Pinned to the pandas oracle at 1e-9
-    (tests/test_engine_vs_oracle.py::test_drift_scores_match_oracle)."""
-    from .drift import calibrated_score
-
+def drift_norms(ref: DataFrame, cand: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:
+    """(partition_id, channel, scale, map, norm, value): the L1 and L4
+    norms of every distortion map over the paired channel series, the
+    input of the calibration."""
     # consumes the prepare() projection (ch_<name> computed once per side).
     # The kernel needs conversation *boundaries*, not identities: a pair of
     # independent 64-bit hashes (128 bits total) replaces the conv_id
@@ -332,27 +328,33 @@ def drift_scores(ref: DataFrame, cand: DataFrame, cfg: CheckSuiteConfig) -> Data
     # spurious cross-conversation join matches. At 128 bits the same
     # estimate is n^2/2^129 ≈ 1e-21: negligible, with a fixed-width
     # 16-byte key still far cheaper to shuffle than arbitrary conv_ids.
-    drift_sub = F.pmod(F.xxhash64("conv_id", F.lit(3)), F.lit(cfg.drift_subbuckets))
+    # ref is clustered by conversation BEFORE the join: a broadcast join
+    # keeps that clustering and a sort-merge join reuses it (cand is
+    # shuffled to match; requireAllClusterKeysForCoPartition=false), so
+    # the kernel's own repartition (its guarantee that a task sees whole
+    # conversations) is planned away, and with a sort-merge join its sort.
+    keys = ["conv_key", "conv_key2"]
     r = ref.select(
         "partition_id",
-        drift_sub.alias("drift_sub"),
         F.xxhash64("conv_id").alias("conv_key"),
         F.xxhash64("conv_id", F.lit(7)).alias("conv_key2"),
         "turn_idx",
         *[F.col(f"ch_{ch}").alias(f"v1_{ch}") for ch in cfg.channels],
-    )
+    ).repartition(*keys)
     c = cand.select(
         F.xxhash64("conv_id").alias("conv_key"),
         F.xxhash64("conv_id", F.lit(7)).alias("conv_key2"),
         "turn_idx",
         *[F.col(f"ch_{ch}").alias(f"v2_{ch}") for ch in cfg.channels],
     )
-    paired = r.join(c, ["conv_key", "conv_key2", "turn_idx"])
-    if cfg.drift_chunk_turns:
-        partials = drift_partials_chunked(_with_chunks(paired, cfg), cfg)
-    else:
-        partials = drift_partials(paired, cfg)
-    metrics = (
+    partials = (
+        r.join(c, [*keys, "turn_idx"])
+        .repartition(*keys)
+        .sortWithinPartitions(*keys, "turn_idx")
+        .select("partition_id", *keys, *[f"v{i}_{ch}" for i in (1, 2) for ch in cfg.channels])
+        .mapInArrow(_partials_fn(cfg), _PARTIAL_SCHEMA)
+    )
+    return (
         partials.groupBy("partition_id", "channel", "scale", "map")
         .agg(
             (F.sum("sum_d") / F.sum("n")).alias("l1_"),
@@ -366,7 +368,16 @@ def drift_scores(ref: DataFrame, cand: DataFrame, cfg: CheckSuiteConfig) -> Data
             "stack(2, 'l1', l1_, 'l4', l4_) AS (norm, value)",
         )
     )
-    return calibrated_score(metrics, cfg)
+
+
+def drift_scores(ref: DataFrame, cand: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:
+    """(partition_id, score): the per-partition calibrated
+    SSIMULACRA2-style score over the paired channel series, for every
+    partition with paired rows. Pinned to the pandas oracle at 1e-9
+    (tests/test_engine_vs_oracle.py::test_drift_scores_match_oracle)."""
+    from .drift import calibrated_score
+
+    return calibrated_score(drift_norms(ref, cand, cfg), cfg)
 
 
 def drift_verdicts(scores: DataFrame, cfg: CheckSuiteConfig) -> DataFrame:

@@ -30,6 +30,8 @@ def test_removed_key_fails_loudly():
         ("hll_rsd", 0.02),
         ("percentile_accuracy", 10_000),
         ("commit_batches", 4),
+        ("drift_subbuckets", 16),
+        ("drift_chunk_turns", 0),
     ):
         d = json.loads(CheckSuiteConfig().to_json())
         d[key] = value

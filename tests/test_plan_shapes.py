@@ -91,11 +91,16 @@ def test_fused_order_unique_single_fact_exchange(spark):
 
 
 def test_drift_chunking_is_plan_not_row_split(spark):
-    """drift_chunk_turns is a PLAN choice (whole kernel chunked or plain),
-    never a row-level hot/cold split: the split design measured ~+10s on
-    the bench (it re-merges the pair join per consumer). Exactly ONE
-    FlatMapGroupsInPandas must appear either way; the halo Generate
-    (explode) appears only when chunking."""
+    """The drift kernel is ONE mapInArrow over the pair join, clustered by
+    conversation and sorted by turn: long conversations are segmented
+    inside the task, never by a row-level split, a halo explode or a
+    position window. The ref side is clustered by conversation before the
+    join, so with the pair join broadcast (the 200k-turn shape) that is
+    the kernel's one exchange, and with a sort-merge join (the 8M-turn
+    shape) the join's exchanges and sorts feed the kernel directly: no
+    exchange or sort of its own."""
+    import re
+
     import pyspark.sql.functions as F
 
     from ssimulacra2_spark.config import CheckSuiteConfig
@@ -110,17 +115,23 @@ def test_drift_chunking_is_plan_not_row_split(spark):
         F.lit(None).cast("string").alias("tool"),
         F.current_timestamp().alias("ts"),
     )
-    base = CheckSuiteConfig(
-        n_buckets=4, num_scales=4, channels=("len", "tok"), drift_subbuckets=2
-    )
-    from dataclasses import replace
-
-    for chunk in (0, 256):
-        cfg = replace(base, drift_chunk_turns=chunk)
-        ref, cand = prepare(df, cfg), prepare(df, cfg)
-        p = _plan(drift_scores(ref, cand, cfg))
-        assert p.count("FlatMapGroupsInPandas") == 1, chunk
-        assert ("explode(" in p) == bool(chunk), chunk  # the halo duplication
+    cfg = CheckSuiteConfig(n_buckets=4, num_scales=4, channels=("len", "tok"))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    # broadcast: ref's repartition, then the two metric groupBys;
+    # sort-merge: the same plus cand's exchange; one sort per join side
+    for threshold, shuffles, sorts in (("10485760", 3, 1), ("-1", 4, 2)):
+        spark.conf.set(key, threshold)
+        try:
+            p = _plan(drift_scores(prepare(df, cfg), prepare(df, cfg), cfg))
+        finally:
+            spark.conf.unset(key)
+        assert p.count("MapInArrow") == 1, threshold
+        assert "FlatMapGroupsInPandas" not in p, threshold
+        assert "explode(" not in p and "Window" not in p, threshold
+        assert len(re.findall(r"Exchange hashpartitioning", p)) == shuffles, threshold
+        assert p.count("REPARTITION_BY_COL") == 1, threshold
+        assert len(re.findall(r"\bSort \[", p)) == sorts, threshold
+        assert ("SortMergeJoin" in p) == (threshold == "-1"), threshold
 
 
 @pytest.mark.parametrize("n_checks", [12, 8])

@@ -2,7 +2,7 @@
 
 Each test pins an equivalence the code now RELIES on:
   * chunked monotone check == naive whole-conversation window
-  * drift partial-sum merging is exact across any sub-bucket fanout
+  * streaming drift kernel == itself across segments and Arrow batch cuts
   * bucket-star connected components == clique connected components
   * recursive-Gaussian batch vectorization == per-series filtering under
     random lengths/values (hypothesis)
@@ -66,88 +66,94 @@ def test_chunked_monotone_equals_naive(spark):
 
 
 # --------------------------------------------------------------------------
-# Drift sub-bucket fanout is exact
+# Streaming drift kernel: segments and Arrow batch cuts are exact
 # --------------------------------------------------------------------------
 
-
-def test_drift_subbuckets_exact(spark, synth_tables):
-    from dataclasses import replace
-
-    from ssimulacra2_spark.operators.checks import prepare
-    from ssimulacra2_spark.operators.drift_arrow import drift_scores
-
-    t = synth_tables
-    base = t["cfg"]
-    scores = []
-    for sub in (1, 16):
-        cfg = replace(base, drift_subbuckets=sub)
-        ref = prepare(t["ref"].drop("partition_id"), cfg)
-        cand = prepare(t["cand"].drop("partition_id"), cfg)
-        scores.append(
-            {r.partition_id: r.score for r in drift_scores(ref, cand, cfg).collect()}
-        )
-    assert scores[0].keys() == scores[1].keys()
-    for pid in scores[0]:
-        a, b = scores[0][pid], scores[1][pid]
-        if a is None or b is None:
-            assert a == b
-        else:
-            assert a == pytest.approx(b, rel=1e-12), pid
+_DRIFT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
 
-# --------------------------------------------------------------------------
-# Chunked drift kernel (halo overlap) == unchunked kernel
-# --------------------------------------------------------------------------
-
-
-def test_drift_chunked_matches_unchunked(spark):
-    """drift_chunk_turns bounds a pandas batch by chunk size even for one
-    giant conversation; ownership masking + halo must reproduce the
-    unchunked scores exactly — including under missing-turn gaps on both
-    sides (dense positions are ranked over the JOINED series, so chunk
-    parity alignment must survive gaps)."""
-    from dataclasses import replace
-
+def _drift_pair(spark, lengths, seed):
+    """A prepared (ref, cand) pair with one conversation per entry of
+    `lengths`; each side drops ~2% of the turns (missing-turn gaps on
+    both sides) and cand appends 1-8 words to a third of the turns."""
     from ssimulacra2_spark.config import CheckSuiteConfig
     from ssimulacra2_spark.operators.checks import prepare
-    from ssimulacra2_spark.operators.drift_arrow import drift_scores, halo_turns
 
-    rng = np.random.default_rng(17)
+    rng = np.random.default_rng(seed)
     rows_r, rows_c = [], []
-    for conv in range(6):
-        n = int(rng.integers(700, 2500))
+    for conv, n in enumerate(lengths):
         drop_r = set(rng.choice(n, size=n // 50, replace=False).tolist())
         drop_c = set(rng.choice(n, size=n // 50, replace=False).tolist())
         for i in range(n):
             text = f"turn {conv} {i} " + "x " * int(rng.integers(0, 60))
+            edit = " y" * int(rng.integers(1, 9)) if rng.random() < 1 / 3 else ""
             tsv = pd.Timestamp("2025-01-01") + pd.to_timedelta(i, unit="s")
             if i not in drop_r:
                 rows_r.append((f"c{conv}", i, "user", text, None, tsv))
             if i not in drop_c:
-                rows_c.append(
-                    (f"c{conv}", i, "user", text if i % 97 else text.upper(), None, tsv)
-                )
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    cfg0 = CheckSuiteConfig(
-        n_buckets=4, num_scales=4, channels=("len", "tok"), drift_subbuckets=2
-    )
-    assert 256 >= 2 * halo_turns(cfg0)  # the test chunk size is legal
-    ref = prepare(spark.createDataFrame(pd.DataFrame(rows_r, columns=cols)), cfg0)
-    cand = prepare(spark.createDataFrame(pd.DataFrame(rows_c, columns=cols)), cfg0)
-    scores = []
-    # two paths over identical input: the plain whole-group kernel and
-    # all-rows chunking (~4-10 chunk boundaries per conversation)
-    for chunk in (0, 256):
-        cfg = replace(cfg0, drift_chunk_turns=chunk)
-        scores.append({r.partition_id: r.score for r in drift_scores(ref, cand, cfg).collect()})
-    for other in scores[1:]:
-        assert scores[0].keys() == other.keys()
-        for pid, a in scores[0].items():
-            b = other[pid]
-            if a is None or b is None:
-                assert a == b
-            else:
-                assert a == pytest.approx(b, rel=1e-12), pid
+                rows_c.append((f"c{conv}", i, "user", text + edit, None, tsv))
+    cfg = CheckSuiteConfig(n_buckets=4, num_scales=4, channels=("len", "tok"))
+    ref = prepare(spark.createDataFrame(pd.DataFrame(rows_r, columns=_DRIFT_COLS)), cfg)
+    cand = prepare(spark.createDataFrame(pd.DataFrame(rows_c, columns=_DRIFT_COLS)), cfg)
+    return ref, cand, cfg
+
+
+def _collect_norms(norms) -> dict:
+    return {
+        (r.partition_id, r.channel, r.scale, r.map, r.norm): r.value
+        for r in norms.collect()
+    }
+
+
+def _assert_norms_equal(want: dict, got: dict, label) -> None:
+    assert want.keys() == got.keys(), label
+    assert sum(v > 0 for v in want.values()) > len(want) // 2, label  # the pair drifts
+    for k, a in want.items():
+        assert got[k] == pytest.approx(a, rel=1e-12, abs=0.0), (label, k)
+
+
+def _norms_at_batch_size(spark, ref, cand, cfg, records=None) -> dict:
+    """drift_norms planned and collected with Arrow batches of at most
+    `records` rows (None: the default). The batch size is fixed when the
+    DataFrame is first planned, so each call builds a new one."""
+    from ssimulacra2_spark.operators.drift_arrow import drift_norms
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    if records is not None:
+        spark.conf.set(key, str(records))
+    try:
+        return _collect_norms(drift_norms(ref, cand, cfg))
+    finally:
+        spark.conf.unset(key)
+
+
+def test_drift_segments_match_unsegmented(spark, monkeypatch):
+    """A conversation longer than _SEGMENT_TURNS is scored in owned,
+    halo-padded segments; the pre-calibration L1/L4 norms of every
+    (partition_id, channel, scale, map) must equal the unsegmented
+    kernel's at 1e-12, including under missing-turn gaps on both sides.
+    Small Arrow batches carry every long conversation across batches, so
+    each one is segmented (4-10 segments per conversation at 256)."""
+    from ssimulacra2_spark.operators import drift_arrow
+
+    ref, cand, cfg = _drift_pair(spark, [700, 2500, 1200, 1900, 900, 2300], seed=17)
+    assert 256 % (1 << cfg.num_scales) == 0 and 256 > drift_arrow.halo_turns(cfg)
+    want = _norms_at_batch_size(spark, ref, cand, cfg)
+    monkeypatch.setattr(drift_arrow, "_SEGMENT_TURNS", 256)
+    for records in (None, 97):
+        _assert_norms_equal(want, _norms_at_batch_size(spark, ref, cand, cfg, records), records)
+
+
+def test_drift_arrow_batch_boundaries(spark):
+    """The conversation open at the end of an Arrow batch is carried into
+    the next: any batch size gives the same norms at 1e-12. The pair has
+    single-turn conversations and one conversation spanning many
+    batches."""
+    lengths = [1] * 12 + [2, 3, 5, 8, 13, 40, 97, 98, 150] + [1500]
+    ref, cand, cfg = _drift_pair(spark, lengths, seed=23)
+    want = _norms_at_batch_size(spark, ref, cand, cfg)
+    for records in (1, 13, 97):
+        _assert_norms_equal(want, _norms_at_batch_size(spark, ref, cand, cfg, records), records)
 
 
 # --------------------------------------------------------------------------
