@@ -1,9 +1,13 @@
 """Production entry point: spark-submit --py-files engine.zip jobs/validate.py
 
 Validates a candidate snapshot against a reference snapshot, writes
-verdicts + violations to a checkpointed results table as one commit
-(resume-safe: a re-run with the same --run-id skips committed partitions),
-and prints a per-check summary.
+verdicts + violations to a checkpointed results table as one commit, and
+prints a per-check summary.
+
+A --run-id names one run. Re-running a committed run id prints its
+committed results without scanning either snapshot, even if the snapshots
+changed since; to validate new inputs, use a new --run-id. A run that
+crashed before its commit left nothing committed and computes afresh.
 
     spark-submit --master local[4] --py-files engine.zip jobs/validate.py \
         --ref /data/transcripts_ref --cand /data/transcripts_cand \

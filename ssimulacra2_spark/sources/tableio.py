@@ -1,6 +1,6 @@
 """TableIO — snapshot reads + checkpointed results writes.
 
-Plain Parquet plus a tiny JSON manifest, providing the three table
+Plain Parquet plus a tiny JSON manifest, providing the two table
 behaviors the engine relies on (SURVEY §7.0; this sandbox has no Iceberg
 runtime, and the reference reads its two inputs as given, lib.rs:41-47):
 
@@ -11,14 +11,8 @@ runtime, and the reference reads its two inputs as given, lib.rs:41-47):
                             commit marker (an append without a marker is
                             invisible to readers — write-then-commit
                             crash atomicity, like an Iceberg snapshot
-                            commit)
-  * resume from checkpoint -> completed partitions are derived from the
-                            COMMITTED VERDICTS TABLE ITSELF (distinct
-                            partition_id scan + anti-join in the suite).
-                            Nothing driver-side is O(partitions): the
-                            manifest holds one entry per commit, not per
-                            partition, so a 10^6-partition run still
-                            carries a ~KB manifest.
+                            commit). One entry per commit, never per
+                            partition, so the manifest stays ~KB.
 """
 
 from __future__ import annotations
@@ -70,25 +64,6 @@ class ParquetTableIO:
         return batches
 
     # -- results ------------------------------------------------------------
-    def completed_partitions(self, spark: SparkSession, run_id: str) -> DataFrame | None:
-        """Distinct partition ids already verdicted for this run, as a
-        DataFrame (the suite anti-joins it against the inputs — no
-        driver-side partition list, per the 10^12-row design point).
-        Derived from the committed verdicts table, not from any manifest
-        bookkeeping. None if nothing is committed yet."""
-        paths = self._batch_paths("verdicts", run_id)
-        if not paths:
-            return None
-        v = spark.read.parquet(*paths)
-        return v.filter(F.col("partition_id") >= 0).select("partition_id").distinct()
-
-    def completed_partition_set(self, spark: SparkSession, run_id: str) -> set[int]:
-        """Test/driver convenience (collects — never call in an engine path)."""
-        df = self.completed_partitions(spark, run_id)
-        if df is None:
-            return set()
-        return {r.partition_id for r in df.collect()}
-
     def write_results(
         self,
         run_id: str,

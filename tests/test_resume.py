@@ -1,9 +1,7 @@
-"""Checkpoint/resume: interrupted runs skip committed partitions and the
-final results table is identical (SURVEY §5.2 item 5).
-
-Completion is derived from the committed verdicts table itself (distinct
-partition_id anti-join) — the manifest is only a commit marker, one per
-suite run."""
+"""Checkpoint/resume: a run commits once, after its filesets are written,
+so a committed run_id is complete and a re-run returns it without reading
+its inputs; a crash before the commit leaves nothing visible (SURVEY §5.2
+item 5). The manifest is only a commit marker, one per suite run."""
 
 from __future__ import annotations
 
@@ -14,54 +12,36 @@ from ssimulacra2_spark.plans.suite import ValidationSuite
 from ssimulacra2_spark.sources.tableio import ParquetTableIO
 
 
-def test_resume_skips_completed(spark, synth_tables, tmp_path):
+def test_committed_run_reads_no_input(spark, synth_tables, tmp_path):
+    """Re-running a committed run_id returns its committed results, with
+    the computed run's columns, and reads neither input: both input
+    directories are deleted before the re-run, so any scan would fail."""
+    import shutil
+
+    from ssimulacra2_spark.operators.checks import VERDICT_SCHEMA, VIOLATION_SCHEMA
+
     t = synth_tables
-    ref = t["ref"].drop("partition_id")
-    cand = t["cand"].drop("partition_id")
-    cfg = t["cfg"]
-    suite = ValidationSuite(cfg)
-
+    ref_p, cand_p = tmp_path / "ref", tmp_path / "cand"
+    for d, pdf in ((ref_p, t["res"].ref), (cand_p, t["res"].cand)):
+        d.mkdir()
+        pdf.to_parquet(d / "part-0.parquet", index=False)
+    ref, cand = spark.read.parquet(str(ref_p)), spark.read.parquet(str(cand_p))
+    suite = ValidationSuite(t["cfg"])
     io = ParquetTableIO(str(tmp_path / "results"))
-    suite.run(spark, ref, cand, io=io, run_id="full")
-    full = {
-        (r.partition_id, r.check_id): (r.passed, r.n_violations)
-        for r in io.read_verdicts(spark, "full").collect()
-    }
-    all_pids = sorted(io.completed_partition_set(spark, "full"))
-    assert len(all_pids) == cfg.n_buckets
+    suite.run(spark, ref, cand, io=io, run_id="r")
+    committed = _committed(spark, io, "r")
+    shutil.rmtree(ref_p)
+    shutil.rmtree(cand_p)
 
-    # simulate an interrupted run: only half the partitions committed
-    io2 = ParquetTableIO(str(tmp_path / "results2"))
-    k = len(all_pids) // 2
-    suite2 = ValidationSuite(cfg)
-    done_subset = all_pids[:k]
-    keep = F.col("partition_id").isin([int(p) for p in done_subset])
-    from ssimulacra2_spark.operators.checks import with_partition_id
-
-    ref_done = with_partition_id(ref, cfg).filter(keep).drop("partition_id")
-    cand_done = with_partition_id(cand, cfg).filter(keep).drop("partition_id")
-    suite2.run(spark, ref_done, cand_done, io=io2, run_id="r")
-    assert io2.completed_partition_set(spark, "r") == set(done_subset)
-
-    # resume with the full inputs: only the remaining partitions compute
-    verdicts2, _ = suite2.run(spark, ref, cand, io=io2, run_id="r")
-    new_pids = {
-        r.partition_id
-        for r in verdicts2.filter(F.col("partition_id") >= 0)
-        .select("partition_id")
-        .distinct()
-        .collect()
-    }
-    assert new_pids == set(all_pids[k:])
-
-    # merged results equal the uninterrupted run (per-partition checks)
-    merged = {
-        (r.partition_id, r.check_id): (r.passed, r.n_violations)
-        for r in io2.read_verdicts(spark, "r").collect()
-        if r.partition_id >= 0
-    }
-    full_pp = {k2: v for k2, v in full.items() if k2[0] >= 0}
-    assert merged == full_pp
+    verdicts, violations = suite.run(spark, ref, cand, io=io, run_id="r")
+    assert len(io.committed_batches("r")) == 1
+    assert verdicts.columns == VERDICT_SCHEMA.fieldNames()
+    assert violations.columns == VIOLATION_SCHEMA.fieldNames()
+    got = (
+        sorted(tuple(r) for r in verdicts.collect()),
+        sorted(tuple(r) for r in violations.collect()),
+    )
+    assert got == committed == _committed(spark, io, "r")
 
 
 def _committed(spark, io, run_id):
@@ -103,7 +83,6 @@ def test_crash_before_commit_marker_is_invisible(spark, synth_tables, tmp_path, 
     assert (tmp_path / "crashy" / "verdicts" / "run=r").is_dir()
     assert io.committed_batches("r") == []
     assert io.read_verdicts(spark, "r").count() == 0
-    assert io.completed_partitions(spark, "r") is None
 
     suite.run(spark, ref, cand, io=io, run_id="r")
     assert len(io.committed_batches("r")) == 1
@@ -147,8 +126,8 @@ def test_merge_on_read_newest_wins_and_as_of(spark, tmp_path):
 
 def test_snapshot_time_travel(spark, synth_tables, tmp_path):
     """as_of pins reads to a past commit: the snapshot view equals what a
-    reader saw at that commit, regardless of later appends. Two runs over
-    disjoint partition subsets give the two commits."""
+    reader saw at that commit, regardless of later appends. The results of
+    two runs over disjoint partition subsets are the two commits."""
     t = synth_tables
     ref, cand = t["ref"], t["cand"]  # partition ids already assigned
     pids = sorted(r.partition_id for r in ref.select("partition_id").distinct().collect())
@@ -156,13 +135,10 @@ def test_snapshot_time_travel(spark, synth_tables, tmp_path):
     io = ParquetTableIO(str(tmp_path / "tt"))
     suite = ValidationSuite(t["cfg"])
     for keep in (F.col("partition_id").isin(first), ~F.col("partition_id").isin(first)):
-        suite.run(
-            spark,
-            ref.filter(keep).drop("partition_id"),
-            cand.filter(keep).drop("partition_id"),
-            io=io,
-            run_id="r",
+        verdicts, violations = suite.run(
+            spark, ref.filter(keep).drop("partition_id"), cand.filter(keep).drop("partition_id")
         )
+        io.write_results("r", verdicts, violations)
     batches = io.committed_batches("r")
     assert len(batches) == 2
     snap0 = {
@@ -240,7 +216,6 @@ def test_resume_across_pre_commit_seq_filesets(spark, tmp_path):
         for r in io.read_verdicts(spark, "r").collect()
     }
     assert got == {0: (False, 7), 1: (True, 0)}
-    assert io.completed_partition_set(spark, "r") == {0, 1}
     assert "stats" in io._load_manifest()["commits"][0]  # old keys survive a commit
 
     # the all-old-filesets path also reads cleanly (backfilled column)
